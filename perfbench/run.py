@@ -7,8 +7,7 @@ session (``local[$SPARK_GRAFT_CPUS]``, default 4), runs closed-loop rounds
 of the workload's operations for ``--seconds`` seconds, checks every
 operation's output against the generator's numpy reference, and prints
 as its last line ``{"correct", "attempted", "failed", "metrics"}``.
-Workloads: ``fst_archive`` and ``text_dedup`` (BENCHMARK.json), the two
-halves of the first as ``fst_compute`` and ``fst_catalog``, and
+Workloads: ``fst_archive`` and ``text_dedup`` (BENCHMARK.json), and
 ``known_defects`` (operations that fail; see NOTES.md).
 
 ``--trace 0`` prints the end-to-end metrics. ``--trace 1`` alternates

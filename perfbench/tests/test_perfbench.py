@@ -109,7 +109,7 @@ def test_refuses_to_run_without_the_engine(tmp_path):
     shutil.copytree(os.path.join(ROOT, "perfbench"), tmp_path / "perfbench",
                     ignore=shutil.ignore_patterns("__pycache__", "out"))
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload",
-                        "fst_compute", "--seed", "1", "--seconds", "1"],
+                        "fst_archive", "--seed", "1", "--seconds", "1"],
                        cwd=tmp_path, capture_output=True, text=True,
                        timeout=120, env=dict(os.environ, PYTHONPATH=""))
     assert p.returncode != 0

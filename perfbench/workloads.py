@@ -183,14 +183,17 @@ def tail(values: "list[float]") -> "tuple[float, float]":
     return v[n - 11], 100.0 * (n - 10) / n
 
 
-class FstCompute(Workload):
-    """A model archive read, computed on and written back: ``fststat``,
-    ``unit_convert`` and a ``StandardFileWriter`` dump to XDF read back.
-    Payload scan, per-record kernels and the writer."""
-    name = "fst_compute"
-    OPS = ("stats", "units", "dump")
+class FstArchive(Workload):
+    """The FST sources both ways, each half on its own inputs. A model
+    archive read, computed on and written back: ``fststat``,
+    ``unit_convert`` and a ``StandardFileWriter`` dump to XDF read back
+    (payload scan, per-record kernels, the writer). Then a seeded query
+    mix over a catalog of many tiny records (directory reads, pushdown,
+    decode expressions and driver planning)."""
+    name = "fst_archive"
     layered_ops = ("stats", "units")
     SIZE = dict(grids=4, ni=12, nj=12, nlev=12)
+    CATALOG_SIZE = dict(files=4, per_file=1000)
 
     def prepare(self, i: int) -> None:
         root = os.path.join(self.input_dir(i), "archive")
@@ -211,7 +214,19 @@ class FstCompute(Workload):
             kelvin[key] = exp
         self.kelvin = kelvin
 
+        root = os.path.join(self.input_dir(i), "catalog")
+        self.cat = gen.catalog_archive(root, self.seed, **self.CATALOG_SIZE)
+        m = self.cat.records
+        self.cols = {k: np.array([r.meta[k] for r in m])
+                     for k in ("nomvar", "etiket", "ip2", "ip3")}
+        self.cols["level"] = np.array([r.level for r in m])
+        self.by_id = {r.meta["ip3"]: r for r in m}
+        self.n_records = len(m)
+
     def round(self, r: int, run: Runner) -> "list[OpResult]":
+        return self._compute(run) + self._queries(run)
+
+    def _compute(self, run: Runner) -> "list[OpResult]":
         from fstd2pandas_spark.operators.stats import fststat
         from fstd2pandas_spark.operators.units import unit_convert
 
@@ -261,40 +276,6 @@ class FstCompute(Workload):
                 "writer.files": len(files)})
         return ops
 
-    def layer_metrics(self, traced) -> dict:
-        out = super().layer_metrics(traced)
-        dumps = _ops(traced, "dump")
-        for k in ("writer.s", "writer.mb_per_s",
-                  "writer.bytes_per_payload_byte", "writer.files"):
-            out[k] = median([o.layer.get(k) for o in dumps])
-        return out
-
-    def layer_probe(self, T: Tracer) -> dict:
-        out = _codec_rates(self.arch)
-        with T.span("sources.scan") as s:
-            _noop_scan(_reader(self.arch.root))
-        out["sources.scan_s"] = s.dur
-        out["sources.scan_mb_per_s"] = self.arch.nbytes / 1e6 / s.dur
-        return out
-
-
-class FstCatalog(Workload):
-    """Directory reads, pushdown, decode expressions and driver planning
-    over many tiny records: a seeded query mix per round."""
-    name = "fst_catalog"
-    OPS = ("pushdown", "level", "voir", "pandas")
-    SIZE = dict(files=4, per_file=1000)
-
-    def prepare(self, i: int) -> None:
-        root = os.path.join(self.input_dir(i), "catalog")
-        self.arch = gen.catalog_archive(root, self.seed, **self.SIZE)
-        m = self.arch.records
-        self.cols = {k: np.array([r.meta[k] for r in m])
-                     for k in ("nomvar", "etiket", "ip2", "ip3")}
-        self.cols["level"] = np.array([r.level for r in m])
-        self.by_id = {r.meta["ip3"]: r for r in m}
-        self.n_records = len(m)
-
     def _ids(self, mask) -> "set[int]":
         return set(self.cols["ip3"][mask].tolist())
 
@@ -326,12 +307,15 @@ class FstCatalog(Workload):
              self._ids(nom & hour & (et == run)), "pandas"),
         ]
 
-    def round(self, r: int, run: Runner) -> "list[OpResult]":
+    def _queries(self, run: Runner) -> "list[OpResult]":
+        """The catalog queries; each operation is named ``query.<name>``."""
         from fstd2pandas_spark.operators.stats import voir
 
-        T, root = run.tracer, self.arch.root
+        T, root = run.tracer, self.cat.root
         res = []
         for name, kw, want, kind in self.queries():
+            name = f"query.{name}"
+
             def build(kw=kw, kind=kind):
                 df = _span_reader(T, root, **kw)
                 if kind == "voir":
@@ -370,32 +354,42 @@ class FstCatalog(Workload):
             res.append(op)
         return res
 
+    def layer_metrics(self, traced) -> dict:
+        out = super().layer_metrics(traced)
+        dumps = _ops(traced, "dump")
+        for k in ("writer.s", "writer.mb_per_s",
+                  "writer.bytes_per_payload_byte", "writer.files"):
+            out[k] = median([o.layer.get(k) for o in dumps])
+        queries = [o for o in _ops(traced) if o.name.startswith("query.")]
+        lat = [o.seconds for o in queries]
+        out["query.p50_s"] = median(lat)
+        out["query.tail_s"], out["query.tail_pct"] = tail(lat)
+        out["sources.examined_per_returned"] = median(
+            [self.n_records / max(o.layer["returned"], 1) for o in queries])
+        out["sources.tasks"] = median([o.layer.get("tasks") for o in queries])
+        return out
+
     def layer_probe(self, T: Tracer) -> dict:
         from fstd2pandas_spark.functions.meta import with_decoded_columns
 
-        root = self.arch.root
+        out = _codec_rates(self.arch)
+        with T.span("sources.scan") as s:
+            _noop_scan(_reader(self.arch.root))
+        out["sources.scan_s"] = s.dur
+        out["sources.scan_mb_per_s"] = self.arch.nbytes / 1e6 / s.dur
+
+        root = self.cat.root
         with T.span("sources.directory") as s:
             n = _reader(root, with_data=False).count()
         if n != self.n_records:
             raise RuntimeError(f"directory scan counted {n} records, "
                                f"expected {self.n_records}")
-        out = {"sources.dir_s": s.dur}
+        out["sources.dir_s"] = s.dur
         with T.span("sources.directory_plain") as plain:
             _noop_scan(_reader(root, with_data=False))
         with T.span("functions.meta.with_decoded_columns") as dec:
             _noop_scan(with_decoded_columns(_reader(root, with_data=False)))
         out["meta.decode_s"] = max(dec.dur - plain.dur, 0.0)
-        return out
-
-    def layer_metrics(self, traced) -> dict:
-        out = super().layer_metrics(traced)
-        ops = _ops(traced)
-        lat = [o.seconds for o in ops]
-        out["query.p50_s"] = median(lat)
-        out["query.tail_s"], out["query.tail_pct"] = tail(lat)
-        out["sources.examined_per_returned"] = median(
-            [self.n_records / max(o.layer["returned"], 1) for o in ops])
-        out["sources.tasks"] = median([o.layer.get("tasks") for o in ops])
         return out
 
 
@@ -445,33 +439,43 @@ class TextDedup(Workload):
         T = run.tracer
         state: dict = {}
 
+        def stored(key: str, *cols: str):
+            """Evaluate the operation's result once, keep it in Spark's
+            cache for the next operation, and collect ``cols`` of it."""
+            def finish(df):
+                state[key] = df.persist()
+                return state[key].select(*cols).toArrow()
+            return finish
+
         def exact():
             with T.span("operators.llm.dedup.exact_dedup"):
                 ex = exact_dedup(self._docs())
-            state["keep"] = self._docs().join(
-                ex.select("doc_id"), "doc_id", "leftsemi")
-            return ex.select("doc_id")
+            return self._docs().join(ex.select("doc_id"), "doc_id",
+                                     "leftsemi")
 
         def lsh():
             with T.span("operators.llm.dedup.lsh_candidate_pairs"):
-                state["pairs"] = lsh_candidate_pairs(state["keep"])
-            return state["pairs"].select("doc_a", "doc_b")
+                return lsh_candidate_pairs(state["keep"])
 
         def components():
             with T.span("operators.llm.cluster.canonical_docs"):
                 out = canonical_docs(state["pairs"], state["keep"])
             return out.select("doc_id", "canonical_id")
 
-        ops = [run.run("exact", exact, _arrow,
-                       self._verify_exact)]
-        if ops[-1].problems:
-            return ops
-        ops.append(run.run("lsh", lsh, _arrow,
-                           self._verify_pairs))
-        if ops[-1].problems:
-            return ops
-        ops.append(run.run("components", components,
-                           _arrow, self._verify_canon))
+        ops = []
+        try:
+            for name, build, finish, verify in (
+                    ("exact", exact, stored("keep", "doc_id"),
+                     self._verify_exact),
+                    ("lsh", lsh, stored("pairs", "doc_a", "doc_b"),
+                     self._verify_pairs),
+                    ("components", components, _arrow, self._verify_canon)):
+                ops.append(run.run(name, build, finish, verify))
+                if ops[-1].problems:
+                    break
+        finally:
+            for df in state.values():
+                df.unpersist()
         return ops
 
     def layer_metrics(self, traced) -> dict:
@@ -530,46 +534,7 @@ class TextDedup(Workload):
         return probs
 
 
-class FstArchive(Workload):
-    """``fst_compute`` and ``fst_catalog`` in one round: the payload path
-    (scan, kernels, writer) and the directory path (pushdown, decode,
-    planning) of the FST sources, each with its own inputs."""
-    name = "fst_archive"
-
-    def __init__(self, spark, base: str, seed: int):
-        super().__init__(spark, base, seed)
-        self.parts = (FstCompute(spark, base, seed),
-                      FstCatalog(spark, base, seed))
-
-    def prepare(self, i: int) -> None:
-        for part in self.parts:
-            part.prepare(i)
-
-    def round(self, r: int, run: Runner) -> "list[OpResult]":
-        return [o for part in self.parts for o in part.round(r, run)]
-
-    def layer_probe(self, T: Tracer) -> dict:
-        out = {}
-        for part in self.parts:
-            out.update(part.layer_probe(T))
-        return out
-
-    def layer_metrics(self, traced) -> dict:
-        """Each part's numbers from its own operations, the status-store
-        totals from whole rounds."""
-        out = {}
-        for part in self.parts:
-            out.update(part.layer_metrics(
-                [[o for o in rnd if o.name in part.OPS] for rnd in traced]))
-        out.update(super().layer_metrics(traced))
-        return out
-
-
-WORKLOADS = {w.name: w for w in (FstArchive, TextDedup, FstCompute,
-                                 FstCatalog)}
-
-
-class KnownDefects(FstCompute):
+class KnownDefects(Workload):
     """The archive jobs known to fail (NOTES.md ledger):
     ``apply_mask``, ``QuickPressure``, write-mode rewrite
     (``metadata_cleanup`` + sort) and ``select_with_meta``, each over a
@@ -582,7 +547,8 @@ class KnownDefects(FstCompute):
     PX_KEY = ("nomvar", "ig1", "ip1", "ip2")
 
     def prepare(self, i: int) -> None:
-        super().prepare(i)
+        root = os.path.join(self.input_dir(i), "archive")
+        self.arch = gen.fst_archive(root, self.seed, **self.SIZE)
         recs = self.arch.records
         masks = {(r.meta["ig1"], r.meta["ip1"], r.meta["ip2"]): r.truth
                  for r in recs if r.meta["typvar"] == "@@"}
@@ -658,7 +624,6 @@ class KnownDefects(FstCompute):
             with T.span("operators.select.select_with_meta"):
                 return select_with_meta(df, ["TT"])
 
-        arrow = _arrow  # noqa: E731
         return [
             run.run("mask", mask, _arrow, lambda t: check.check_records(
                 t, self.masked, "apply_mask")),
@@ -670,8 +635,5 @@ class KnownDefects(FstCompute):
                 t, self.selected, "select_with_meta")),
         ]
 
-    def layer_probe(self, T: Tracer) -> dict:
-        return {}
 
-
-WORKLOADS[KnownDefects.name] = KnownDefects
+WORKLOADS = {w.name: w for w in (FstArchive, TextDedup, KnownDefects)}
