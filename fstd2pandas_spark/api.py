@@ -58,31 +58,21 @@ class StandardFileReader:
         """The record table as a (lazy, distributed) Spark DataFrame."""
         from fstd2pandas_spark.sources import register
 
-        try:
-            register(self._spark)
-        except Exception:
-            pass  # already registered in this session
+        register(self._spark)
         reader = self._spark.read.format("fstrec")
         if not self.with_data:
             reader = reader.option("with_data", "false")
         df = reader.load(self.path)
-        if self.query:
-            # filter BEFORE decode when the predicate only touches base
-            # columns, so it reaches the source (pushdown, O1); a
-            # predicate over decoded columns analyzes only after decode
-            try:
-                df = df.filter(F.expr(self.query))
-            except Exception:
-                if not self.decode_metadata:
-                    raise
-                from fstd2pandas_spark.functions.meta import (
-                    with_decoded_columns)
-
-                return with_decoded_columns(df).filter(F.expr(self.query))
         if self.decode_metadata:
             from fstd2pandas_spark.functions.meta import with_decoded_columns
 
             df = with_decoded_columns(df)
+        if self.query:
+            # one filter over the decoded table: a predicate that only
+            # touches base columns still reaches the source (Catalyst
+            # pushes it below the decode projection and the lookup join
+            # into the scan, O1)
+            df = df.filter(F.expr(self.query))
         return df
 
     def to_pandas(self):
@@ -118,10 +108,7 @@ class StandardFileWriter:
     def to_fst(self) -> None:
         from fstd2pandas_spark.sources import register, write_record_table
 
-        try:
-            register(self.df.sparkSession)
-        except Exception:
-            pass  # already registered in this session
+        register(self.df.sparkSession)
         write_record_table(self.df, self.path, mode=self.mode,
                            overwrite=self.overwrite,
                            partition_by=self.partition_by,

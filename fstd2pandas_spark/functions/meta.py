@@ -30,6 +30,7 @@ from fstd2pandas_spark.functions.codecs import (
     stamp_to_timestamp,
     forecast_hour_seconds,
 )
+from fstd2pandas_spark.memo import session_memo
 
 
 def grid_identifier(nomvar: Column, ip1: Column, ip2: Column,
@@ -152,17 +153,23 @@ def level_ascending(kind: Column) -> Column:
     return kind.isin(0, 3, 4, 21, 100)
 
 
-def interval_struct(nomvar: Column, ip1: Column, ip2: Column, ip3: Column) -> Column:
+def interval_struct(nomvar: Column, ip1: Column, ip2: Column, ip3: Column,
+                    decoded: "tuple | None" = None) -> Column:
     """Interval detection (std_dec.py:44-69 + std_io.py:854-871).
 
     When ip3 >= 32768 and its kind matches ip2's (time interval) or ip1's
     (level interval), emit struct(ip, low, high, kind); else NULL. Low/high
     follow the reference's v1/v2 assignment: time interval -> (v1=ip3 value,
     v2=ip2 value); level interval -> (v1=ip1 value, v2=ip3 value).
+
+    ``decoded`` optionally passes the raw ``((k1, v1), (k2, v2), (k3,
+    v3))`` kind/value Columns of ip1..ip3 a caller has already built
+    (the decode cascade does), so they are not built twice.
     """
-    k1, v1 = decode_ip_kind(ip1), decode_ip_value(ip1)
-    k2, v2 = decode_ip_kind(ip2), decode_ip_value(ip2)
-    k3, v3 = decode_ip_kind(ip3), decode_ip_value(ip3)
+    if decoded is None:
+        decoded = tuple((decode_ip_kind(ip), decode_ip_value(ip))
+                        for ip in (ip1, ip2, ip3))
+    (k1, v1), (k2, v2), (k3, v3) = decoded
     special = F.trim(nomvar).isin(">>", "^^", "^>", "!!", "HY", "P0", "PT")
     null = F.lit(None)
 
@@ -181,37 +188,29 @@ def interval_struct(nomvar: Column, ip1: Column, ip2: Column, ip3: Column) -> Co
     )
 
 
-def with_decoded_columns(df: DataFrame) -> DataFrame:
-    """The full decode cascade (reference ``add_columns``,
-    dataframe.py:582-629): one `select`, all native expressions, so Catalyst
-    folds it into the scan projection.
-
-    Adds: label/run/implementation/ensemble_member, unit/description (via
-    broadcast stdvar join), date_of_observation/date_of_validity,
-    forecast_hour (seconds), data_type_str, level/ip1_kind/ip1_pkind,
-    ip2_dec/ip2_kind/ip2_pkind, ip3_dec/ip3_kind/ip3_pkind, surface,
-    follow_topography, ascending, interval, and the 8 typvar flags.
-    """
+def _decode_plan() -> "tuple[list[Column], DataFrame, list]":
+    """The decode cascade's pieces: the select list over the record
+    table, the broadcast stdvar lookup, and the (name, Column) defaults
+    applied to its unit/description after the lookup join."""
     from fstd2pandas_spark.lookups import stdvar_df
 
+    ip1, ip2, ip3 = F.col("ip1"), F.col("ip2"), F.col("ip3")
+    nomvar = F.col("nomvar")
     et = parsed_etiket(F.col("etiket"))
-    k1 = decode_ip_kind(F.col("ip1"))
-    v1 = decode_ip_value(F.col("ip1"))
-    k2 = decode_ip_kind(F.col("ip2"))
-    v2 = decode_ip_value(F.col("ip2"))
-    k3 = decode_ip_kind(F.col("ip3"))
-    v3 = decode_ip_value(F.col("ip3"))
+    raw = tuple((decode_ip_kind(ip), decode_ip_value(ip))
+                for ip in (ip1, ip2, ip3))
+    (k1, v1), (k2, v2), (k3, v3) = raw
     # meta/coordinate records decode ips verbatim with pseudo-kind 100
-    is_axis = F.trim(F.col("nomvar")).isin(">>", "^^", "^>", "!!")
+    is_axis = F.trim(nomvar).isin(">>", "^^", "^>", "!!")
     k1 = F.when(is_axis, F.lit(100)).otherwise(k1)
-    v1 = F.when(is_axis, F.col("ip1").cast("double")).otherwise(v1)
-    k2 = F.when(is_axis, F.lit(100)).otherwise(F.when(F.col("ip2") < 32768, F.lit(10)).otherwise(k2))
-    v2 = F.when(is_axis, F.col("ip2").cast("double")).otherwise(v2)
-    k3 = F.when(is_axis | (F.col("ip3") < 32768), F.lit(100)).otherwise(k3)
-    v3 = F.when(is_axis, F.col("ip3").cast("double")).otherwise(v3)
+    v1 = F.when(is_axis, ip1.cast("double")).otherwise(v1)
+    k2 = F.when(is_axis, F.lit(100)).otherwise(F.when(ip2 < 32768, F.lit(10)).otherwise(k2))
+    v2 = F.when(is_axis, ip2.cast("double")).otherwise(v2)
+    k3 = F.when(is_axis | (ip3 < 32768), F.lit(100)).otherwise(k3)
+    v3 = F.when(is_axis, ip3.cast("double")).otherwise(v3)
 
-    decoded = df.select(
-        "*",
+    cols = [
+        F.col("*"),
         et["label"].alias("label"),
         et["run"].alias("run"),
         et["implementation"].alias("implementation"),
@@ -232,19 +231,39 @@ def with_decoded_columns(df: DataFrame) -> DataFrame:
         is_surface(k1, v1).alias("surface"),
         follows_topography(k1).alias("follow_topography"),
         level_ascending(k1).alias("ascending"),
-        interval_struct(F.col("nomvar"), F.col("ip1"), F.col("ip2"), F.col("ip3")).alias("interval"),
+        interval_struct(nomvar, ip1, ip2, ip3, raw).alias("interval"),
         *typvar_flags(F.col("typvar")),
-    )
+    ]
     lookup = F.broadcast(
         stdvar_df().select(
-            "nomvar",
-            F.col("unit").alias("_u"),
-            F.col("description_en").alias("_d"),
-        )
+            "nomvar", "unit", F.col("description_en").alias("description"))
     )
-    return (
-        decoded.join(lookup, "nomvar", "left")
-        .withColumn("unit", F.coalesce(F.col("_u"), F.lit("scalar")))
-        .withColumn("description", F.coalesce(F.col("_d"), F.lit("")))
-        .drop("_u", "_d")
-    )
+    # variables missing from the dictionary: 'scalar', no description
+    defaults = [("unit", F.coalesce(F.col("unit"), F.lit("scalar"))),
+                ("description", F.coalesce(F.col("description"), F.lit("")))]
+    return cols, lookup, defaults
+
+
+def with_decoded_columns(df: DataFrame) -> DataFrame:
+    """The full decode cascade (reference ``add_columns``,
+    dataframe.py:582-629): one `select`, all native expressions, so Catalyst
+    folds it into the scan projection.
+
+    Adds: label/run/implementation/ensemble_member, unit/description (via
+    broadcast stdvar join), date_of_observation/date_of_validity,
+    forecast_hour (seconds), data_type_str, level/ip1_kind/ip1_pkind,
+    ip2_dec/ip2_kind/ip2_pkind, ip3_dec/ip3_kind/ip3_pkind, surface,
+    follow_topography, ascending, interval, and the 8 typvar flags.
+
+    The select list, the lookup frame and the unit/description Columns
+    are built once per Spark context (:func:`~fstd2pandas_spark.memo.
+    session_memo`): the Column trees take thousands of py4j round trips
+    to build and are the same for every input, so later calls only pay
+    for applying them (tens of round trips).
+    """
+    cols, lookup, defaults = session_memo("with_decoded_columns",
+                                          _decode_plan)
+    out = df.select(*cols).join(lookup, "nomvar", "left")
+    for name, col in defaults:
+        out = out.withColumn(name, col)
+    return out

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fstd2pandas_spark.memo import session_memo
+
 _DIR = os.path.dirname(os.path.abspath(__file__))
 
 _UNITS_SCHEMA = T.StructType([
@@ -84,24 +86,12 @@ def _read(spark: SparkSession, name: str, schema: T.StructType) -> DataFrame:
     )
 
 
-#: per-table cache holding (owning session, frame) — NOT lru_cache on
-#: the name alone: that pinned each DataFrame to whichever SparkSession
-#: existed FIRST, so after a session stop/restart every lookup join
-#: died on a stopped SparkContext (round-15 review; pinned). The owning
-#: session is compared by IDENTITY on every hit (an id()-keyed variant
-#: could alias a recycled object id), and a miss simply reloads the
-#: kilobyte CSV under the current session.
-_SESSION_CACHE: "dict[str, tuple[SparkSession, DataFrame]]" = {}
-
-
 def _cached(key: str) -> DataFrame:
+    """The lookup frame ``key``, loaded (and cached) once per Spark
+    context: a stopped and relaunched session reloads the kilobyte CSV
+    instead of joining against a frame of the dead context."""
     spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
-    hit = _SESSION_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    df = _load(spark, key)
-    _SESSION_CACHE[key] = (spark, df)
-    return df
+    return session_memo(("lookup", key), lambda: _load(spark, key))
 
 
 def _load(spark: SparkSession, key: str) -> DataFrame:

@@ -27,13 +27,12 @@ multiplies scans by funnel depth — the fold reads the events once.
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fstd2pandas_spark.functions.timeutil import (ntz_epoch_us,
                                                   ntz_trunc)
+from fstd2pandas_spark.memo import session_memo
 
 
 def funnel_steps(df: DataFrame, steps: "list[str]", ts_col: str = "ts",
@@ -63,23 +62,20 @@ def _funnel_fold(steps: "list[str]", ts_col: str, type_col: str,
                  id_col: str, within: "int | None"):
     """The shared fold machinery: (sorted-events aggregate expression,
     fold-over-'_ev' Column) used by :func:`funnel_steps` and
-    :func:`user_activity_report`. Memoized on its parameters (r18):
-    building these Column trees costs ~70 ms of py4j round trips per
-    call, and Columns are immutable unresolved expressions — safe to
-    reuse across DataFrames and queries WITHIN one JVM gateway: the
-    key carries the active SparkContext's identity (r19) so a
-    stop()/relaunch in a long-lived process gets fresh Columns instead
-    of dead py4j references."""
-    from pyspark import SparkContext
-    tok = id(SparkContext._active_spark_context)
-    return _funnel_fold_cached(tok, tuple(steps), ts_col, type_col,
-                               id_col, within)
+    :func:`user_activity_report`. Memoized per Spark context on its
+    parameters (:func:`~fstd2pandas_spark.memo.session_memo`): building
+    these Column trees costs ~70 ms of py4j round trips per call, and
+    Columns are immutable unresolved expressions — safe to reuse across
+    DataFrames and queries of one context."""
+    steps = tuple(steps)
+    return session_memo(
+        ("funnel_fold", steps, ts_col, type_col, id_col, within),
+        lambda: _build_funnel_fold(steps, ts_col, type_col, id_col, within))
 
 
-@lru_cache(maxsize=64)
-def _funnel_fold_cached(_session_tok: int, steps: "tuple[str, ...]",
-                        ts_col: str, type_col: str, id_col: str,
-                        within: "int | None"):
+def _build_funnel_fold(steps: "tuple[str, ...]", ts_col: str,
+                       type_col: str, id_col: str,
+                       within: "int | None"):
     if not steps:
         raise ValueError("funnel: need at least one step")
     k = len(steps)

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fstd2pandas_spark.functions.codecs import decode_ip_value
+from fstd2pandas_spark.memo import session_memo
 
 
 def array_stats_columns(d: "Column | str" = "d",
@@ -47,7 +48,13 @@ def array_stats_columns(d: "Column | str" = "d",
     calls. The expressions are verbatim transcriptions (same HOF
     census — pinned by test_fststat_array_pass_census — and
     value-identical, pinned by the fst_stats oracle gate and
-    test_operators)."""
+    test_operators).
+
+    min_pos/max_pos are linear in the field size: the NaN probe and
+    the extreme are computed once per record, below the position scan,
+    and bound to lambda variables that Catalyst cannot inline back
+    (bit-identical to the per-element ``x = array_min(d)`` form, pinned
+    by test_build_memo)."""
     def _as_ident(c, what: str) -> str:
         # Column back-compat is for bare identifiers ONLY (r19 guard):
         # a composite expression would be silently re-parsed as SQL
@@ -83,7 +90,7 @@ def array_stats_columns(d: "Column | str" = "d",
 
     nj = f"cast(floor(size({d}) / {ni}) as bigint)"
 
-    def _lex_argpos(pred: str) -> str:
+    def _lex_argpos(extreme: str) -> str:
         # (i, j) of the matching element FIRST in (i, j)-lexicographic
         # order: np.argmin/argmax flatten the reference's (ni, nj)
         # array C-order — the traversal visits positions in (i, j) lex
@@ -94,20 +101,29 @@ def array_stats_columns(d: "Column | str" = "d",
         # order linearized) + array_min over longs — a struct-keyed
         # variant measured ~2x slower on the sf0.1 bench (per-element
         # struct boxing); non-matching slots are NULL, which array_min
-        # skips.
-        k = (f"array_min(transform({d}, (x, p0) -> "
-             f"CASE WHEN {pred} THEN "
-             f"cast(p0 % {ni} as bigint) * {nj} + floor(p0 / {ni}) END))")
-        return (f"named_struct("
-                f"'i', cast(floor({k} / {nj}) + 1 as int), "
-                f"'j', cast({k} % {nj} + 1 as int))")
+        # skips. A matching slot is the first NaN when the field has
+        # one, else an element equal to the extreme.
+        #
+        # Linear per record: the NaN probe and the extreme are computed
+        # once, bound to s by a transform over a one-element array
+        # (Spark SQL's let), and the key to k the same way. Written
+        # inline in the position lambda, array_min(d) ran over the
+        # whole field again for every element (O(n^2) per record).
+        # Catalyst never substitutes a lambda argument into its body,
+        # so the bindings survive optimization.
+        bound = (f"array(named_struct('nan', {has_nan}, "
+                 f"'v', {extreme}({d})))")
+        key = (f"array_min(transform({d}, (x, p0) -> "
+               f"CASE WHEN (CASE WHEN s.nan THEN isnan(cast(x as double)) "
+               f"ELSE x = s.v END) THEN "
+               f"cast(p0 % {ni} as bigint) * {nj} + floor(p0 / {ni}) END))")
+        return (f"element_at(transform(transform({bound}, s -> {key}), "
+                f"k -> named_struct("
+                f"'i', cast(floor(k / {nj}) + 1 as int), "
+                f"'j', cast(k % {nj} + 1 as int))), 1)")
 
-    pmin = (f"CASE WHEN {has_nan} "
-            f"THEN {_lex_argpos('isnan(cast(x as double))')} "
-            f"ELSE {_lex_argpos(f'x = array_min({d})')} END")
-    pmax = (f"CASE WHEN {has_nan} "
-            f"THEN {_lex_argpos('isnan(cast(x as double))')} "
-            f"ELSE {_lex_argpos(f'x = array_max({d})')} END")
+    pmin = _lex_argpos("array_min")
+    pmax = _lex_argpos("array_max")
 
     return [
         F.expr(mn).alias("min"), F.expr(mx).alias("max"),
@@ -116,26 +132,40 @@ def array_stats_columns(d: "Column | str" = "d",
     ]
 
 
+def _level() -> Column:
+    """The record's decoded ip1 level (float), as ``level``."""
+    return decode_ip_value(F.col("ip1")).cast("float").alias("level")
+
+
+def _fststat_columns() -> list[Column]:
+    return [F.col("nomvar"), F.col("typvar"), _level(),
+            *[F.col(c) for c in ("ip1", "ip2", "ip3", "dateo", "etiket")],
+            *array_stats_columns("d", "ni")]
+
+
 def fststat(df: DataFrame) -> DataFrame:
     """Summary statistics per record (dataframe_utils.py:147-182).
 
     Returns the id columns + stats; show()/collect() at the caller's
-    discretion (the reference prints)."""
-    return df.select(
-        "nomvar", "typvar",
-        decode_ip_value(F.col("ip1")).cast("float").alias("level"),
-        "ip1", "ip2", "ip3", "dateo", "etiket",
-        *array_stats_columns("d", "ni"),
-    )
+    discretion (the reference prints). Linear in the field size per
+    record (see :func:`array_stats_columns`); the select list is built
+    once per Spark context (:func:`~fstd2pandas_spark.memo.session_memo`).
+    """
+    return df.select(*session_memo("fststat", _fststat_columns))
+
+
+_VOIR_COLS = ("nomvar", "typvar", "etiket", "ni", "nj", "nk", "dateo",
+              "ip1", "ip2", "ip3", "deet", "npas", "datyp", "nbits",
+              "grtyp", "ig1", "ig2", "ig3", "ig4")
+
+
+def _voir_columns() -> "tuple[list[Column], list[Column]]":
+    return ([*[F.col(c) for c in _VOIR_COLS], _level()],
+            [F.col("nomvar").asc(), F.col("level").desc()])
 
 
 def voir(df: DataFrame) -> DataFrame:
     """Record listing in the rpn `voir` order: nomvar asc, level desc
-    (dataframe_utils.py:117-140)."""
-    return (
-        df.withColumn("level", decode_ip_value(F.col("ip1")).cast("float"))
-        .select("nomvar", "typvar", "etiket", "ni", "nj", "nk", "dateo",
-                "ip1", "ip2", "ip3", "deet", "npas", "datyp", "nbits",
-                "grtyp", "ig1", "ig2", "ig3", "ig4", "level")
-        .orderBy(F.col("nomvar").asc(), F.col("level").desc())
-    )
+    (dataframe_utils.py:117-140). Columns built once per Spark context."""
+    cols, order = session_memo("voir", _voir_columns)
+    return df.select(*cols).orderBy(*order)

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fstd2pandas_spark.lookups import units_df, get_unit_row, stdvar_df
+from fstd2pandas_spark.memo import session_memo
 from fstd2pandas_spark.schema import META_NOMVARS
 
 
@@ -36,6 +37,65 @@ def converter_columns(from_bias: Column, from_factor: Column,
     scale = from_factor / to_factor
     offset = from_bias * from_factor / to_factor - to_bias
     return scale, offset
+
+
+def _unit_lookup(name: str, prefix: str) -> DataFrame:
+    """The UNITS table keyed on ``name`` with its expression, bias and
+    factor as ``_<prefix>expr`` / ``_<prefix>bias`` / ``_<prefix>factor``,
+    marked for broadcast."""
+    return F.broadcast(units_df().select(
+        F.col("name").alias(name),
+        F.col("expression").alias(f"_{prefix}expr"),
+        F.col("bias").alias(f"_{prefix}bias"),
+        F.col("factor").alias(f"_{prefix}factor"),
+    ))
+
+
+def _unit_plan(to_unit_name: str, standard_unit: bool,
+               columns: "tuple[str, ...]") -> dict:
+    """unit_convert's lookup frames and Columns for an input with
+    ``columns``; built once per Spark context and key."""
+    plan = {
+        "from_units": _unit_lookup("unit", "f"),
+        "to_units": _unit_lookup("_to_name", "t"),
+    }
+    if "unit" not in columns:
+        plan["stdvar_unit"] = F.broadcast(
+            stdvar_df().select("nomvar", "unit"))
+        plan["unit_default"] = F.coalesce(F.col("unit"), F.lit("scalar"))
+    if standard_unit:
+        plan["target"] = F.broadcast(
+            stdvar_df().select("nomvar", F.col("unit").alias("_to_name")))
+        plan["target_name"] = F.coalesce(F.col("_to_name"), F.lit("scalar"))
+    else:
+        plan["target_name"] = F.lit(to_unit_name)
+
+    convertible = (
+        ~F.col("nomvar").isin(META_NOMVARS)
+        & (F.col("unit") != F.col("_to_name"))
+        & (F.col("unit") != "scalar") & (F.col("_to_name") != "scalar")
+        & (F.col("_fexpr") == F.col("_texpr"))
+        & F.col("_fexpr").isNotNull()
+    )
+    scale, offset = converter_columns(
+        F.col("_fbias"), F.col("_ffactor"), F.col("_tbias"), F.col("_tfactor")
+    )
+    converted_d = F.transform(
+        F.col("d"), lambda x: (x.cast("double") * scale + offset).cast("float")
+    )
+    changed = {
+        "d": converted_d,
+        "unit": F.col("_to_name"),
+        "unit_converted": F.lit(True),
+    }
+    # one select over the joined row: every output reads ``convertible``
+    # from the input unit, before any column is overwritten
+    plan["select"] = [
+        F.when(convertible, changed[c]).otherwise(F.col(c)).alias(c)
+        if c in changed else F.col(c)
+        for c in columns
+    ]
+    return plan
 
 
 def unit_convert(df: DataFrame, to_unit_name: str = "scalar",
@@ -52,78 +112,28 @@ def unit_convert(df: DataFrame, to_unit_name: str = "scalar",
       caller should validate beforehand (the reference raises driver-side;
       a distributed engine can't raise per-row, so an ``_unit_family_ok``
       check is exposed via :func:`family_mismatch_rows`);
-    - sets ``unit`` and the ``unit_converted`` typvar flag on converted rows.
+    - on converted rows, sets ``unit`` to the target and, when the input
+      has a ``unit_converted`` column (the decoded typvar flag), sets it
+      True; ``typvar`` itself stays as read.
 
     With ``standard_unit=True`` the target is each variable's dictionary
-    unit (stdvar join) instead of ``to_unit_name``.
+    unit (stdvar join) instead of ``to_unit_name``. The lookup frames and
+    Columns are built once per Spark context, target and input columns
+    (:func:`~fstd2pandas_spark.memo.session_memo`).
     """
-    if "unit" not in df.columns:
-        lookup = F.broadcast(stdvar_df().select("nomvar", "unit"))
-        df = (
-            df.join(lookup, "nomvar", "left")
-            .withColumn("unit", F.coalesce(F.col("unit"), F.lit("scalar")))
-        )
-
-    units = units_df().select(
-        F.col("name"), F.col("expression").alias("_expr"),
-        F.col("bias").alias("_bias"), F.col("factor").alias("_factor"),
-    )
-
-    is_meta = F.col("nomvar").isin(META_NOMVARS)
-
-    # attach from-unit params
-    out = df.join(
-        F.broadcast(units.withColumnRenamed("name", "unit")
-                    .withColumnRenamed("_expr", "_fexpr")
-                    .withColumnRenamed("_bias", "_fbias")
-                    .withColumnRenamed("_factor", "_ffactor")),
-        "unit", "left",
-    )
-    # attach to-unit params
+    columns = tuple(df.columns)
+    plan = session_memo(
+        ("unit_convert", to_unit_name, standard_unit, columns),
+        lambda: _unit_plan(to_unit_name, standard_unit, columns))
+    if "unit" not in columns:
+        df = (df.join(plan["stdvar_unit"], "nomvar", "left")
+              .withColumn("unit", plan["unit_default"]))
+    out = df.join(plan["from_units"], "unit", "left")
     if standard_unit:
-        target = F.broadcast(
-            stdvar_df().select("nomvar", F.col("unit").alias("_to_name"))
-        )
-        out = out.join(target, "nomvar", "left")
-        out = out.withColumn("_to_name", F.coalesce(F.col("_to_name"), F.lit("scalar")))
-    else:
-        out = out.withColumn("_to_name", F.lit(to_unit_name))
-    out = out.join(
-        F.broadcast(units.withColumnRenamed("name", "_to_name")
-                    .withColumnRenamed("_expr", "_texpr")
-                    .withColumnRenamed("_bias", "_tbias")
-                    .withColumnRenamed("_factor", "_tfactor")),
-        "_to_name", "left",
-    )
-
-    convertible = (
-        ~is_meta
-        & (F.col("unit") != F.col("_to_name"))
-        & (F.col("unit") != "scalar") & (F.col("_to_name") != "scalar")
-        & (F.col("_fexpr") == F.col("_texpr"))
-        & F.col("_fexpr").isNotNull()
-    )
-    scale, offset = converter_columns(
-        F.col("_fbias"), F.col("_ffactor"), F.col("_tbias"), F.col("_tfactor")
-    )
-    converted_d = F.transform(
-        F.col("d"), lambda x: (x.cast("double") * scale + offset).cast("float")
-    )
-    out = (
-        out.withColumn("d", F.when(convertible, converted_d).otherwise(F.col("d")))
-        .withColumn("unit", F.when(convertible, F.col("_to_name")).otherwise(F.col("unit")))
-        .withColumn(
-            "typvar",
-            F.when(convertible & (F.length("typvar") < 2),
-                   F.concat(F.col("typvar"), F.lit("U"))).otherwise(F.col("typvar")),
-        )
-    )
-    if "unit_converted" in df.columns:
-        out = out.withColumn(
-            "unit_converted",
-            F.when(convertible, F.lit(True)).otherwise(F.col("unit_converted")),
-        )
-    return out.select(*df.columns)
+        out = out.join(plan["target"], "nomvar", "left")
+    out = (out.withColumn("_to_name", plan["target_name"])
+           .join(plan["to_units"], "_to_name", "left"))
+    return out.select(*plan["select"])
 
 
 def family_mismatch_rows(df: DataFrame, to_unit_name: str) -> DataFrame:

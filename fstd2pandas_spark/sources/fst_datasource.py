@@ -841,7 +841,13 @@ def register(spark) -> None:
     Python DataSource reader that defines ``pushFilters()`` when
     ``spark.sql.python.filterPushdown.enabled`` is false, so make sure
     it is on (runtime-settable); if the session has made it static and
-    off, degrade to the no-pushdown reader instead of failing the scan."""
+    off, degrade to the no-pushdown reader instead of failing the scan.
+
+    The conf check runs on every call; the registration itself runs once
+    per session (Spark keeps one data-source registry per session, and
+    registering again replaces the entry with a warning in the log)."""
+    from fstd2pandas_spark.memo import session_memo
+
     try:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
         FstRecDataSource.pushdown = True
@@ -850,4 +856,5 @@ def register(spark) -> None:
             spark.conf.get("spark.sql.python.filterPushdown.enabled", "false")
         ).lower() == "true"
         FstRecDataSource.pushdown = enabled
-    spark.dataSource.register(FstRecDataSource)
+    session_memo(("fstrec", spark._jsparkSession.sessionUUID()),
+                 lambda: spark.dataSource.register(FstRecDataSource))
