@@ -12,7 +12,8 @@ engine's sequential ``aggregate(zip_with(...))`` evaluation and to the
 oracle's SQL mirror.
 
 Bit-exactness contract (argued once here, pinned by
-tests/test_ann_kernels.py against the Column implementations):
+tests/test_ann_kernels.py against the Column reference forms in
+tests/_ann_ref.py):
 
 - dot:  ``acc = 0.0; for j: acc = acc + double(x[j]) * w[j]`` — the
   exact left fold ``aggregate(zip_with(v, w, (x,y) -> double(x)*y),
@@ -80,8 +81,8 @@ def _decompose(vec):
 
 def ivf_cells(vec, weights: np.ndarray, dim: int) -> np.ndarray:
     """IVF cell per row of an Arrow list<float> array — the kernel twin
-    of ``similarity.ivf_cell_col`` (see module docstring for the
-    exactness argument). ``weights``: float64[n_cells, dim]."""
+    of ``ivf_cell_col`` in tests/_ann_ref.py (see module docstring for
+    the exactness argument). ``weights``: float64[n_cells, dim]."""
     n_cells = weights.shape[0]
     row_null, lengths, starts, flat, flat_null = _decompose(vec)
     n = len(row_null)
@@ -120,7 +121,8 @@ def ivf_cells(vec, weights: np.ndarray, dim: int) -> np.ndarray:
 def pq_codes(vec, codebook: np.ndarray, m: int, ksub: int,
              d_sub: int) -> np.ndarray:
     """PQ code matrix int32[n, m] for an Arrow list<float> array — the
-    kernel twin of ``similarity.pq_codes_col`` (see module docstring).
+    kernel twin of ``pq_codes_col`` in tests/_ann_ref.py (see module
+    docstring).
     ``codebook``: float64[m, ksub, d_sub]."""
     row_null, lengths, starts, flat, flat_null = _decompose(vec)
     n = len(row_null)

@@ -26,8 +26,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fstd2pandas_spark.operators.llm.text import (
-    tokens_col, shingles_col, simhash, sql_ident,
+    shingles_col, simhash, simhash_fold_sql, simhash_token_hashes_sql,
+    sql_ident, token_hash_col, tokens_col,
 )
+from fstd2pandas_spark.memo import session_memo
 from fstd2pandas_spark.plans.partitioning import ensure_min_partitions
 
 
@@ -43,46 +45,32 @@ from fstd2pandas_spark.plans.partitioning import ensure_min_partitions
 MAX_GROUP_MEMBERS = 10_000
 
 
-#: shared ceiling-message halves: the DSL guard (require_group_within)
-#: and the fused-SQL guard (_group_ceiling_sql) build the SAME message
-#: from these, so the two plan-construction paths cannot drift
-_CEILING_MSG_PRE = "{what} has "
-_CEILING_MSG_POST = (
-    " members, above MAX_GROUP_MEMBERS={cap} — a hot "
-    "collision group this size means the banding/cell knobs "
-    "are mistuned for this corpus (or it needs exact-dedup "
-    "first); raise fstd2pandas_spark.operators.llm.dedup."
-    "MAX_GROUP_MEMBERS deliberately if the B^2/2 pair "
-    "fan-out is intended")
+def require_group_within(cnt: "str | Column", what: str,
+                         cap: "int | None" = None) -> str:
+    """SQL boolean guard for a group-size ceiling: true below the cap,
+    in-plan ``raise_error`` above it — silent truncation would
+    under-report duplicates, the one thing a dedup must not do.
 
-
-def require_group_within(cnt: Column, what: str,
-                         cap: "int | None" = None) -> Column:
-    """Boolean guard column for a group-size ceiling: True below the
-    cap, in-plan ``raise_error`` above it — silent truncation would
-    under-report duplicates, the one thing a dedup must not do. Use as
-    a ``.filter(...)`` predicate right where the group size first
-    becomes known (after the fold for narrow id arrays; BEFORE the fold
-    via a window count when members carry whole vectors)."""
+    ``cnt`` is the SQL text of the member count (``"size(ms)"``,
+    ``"_cn"``); a bare Column reference is rendered by its SQL text.
+    Fused ``spark.sql`` builders splice the result into their WHERE,
+    DataFrame paths pass it to ``.filter`` — one predicate, one
+    message, wherever the group size first becomes known (after the
+    fold for narrow id arrays; BEFORE the fold via a window count when
+    members carry whole vectors)."""
     cap = MAX_GROUP_MEMBERS if cap is None else cap
-    msg = F.concat(
-        F.lit(_CEILING_MSG_PRE.format(what=what)), cnt.cast("string"),
-        F.lit(_CEILING_MSG_POST.format(cap=cap)))
-    return F.when(cnt <= F.lit(int(cap)), F.lit(True)) \
-            .otherwise(F.raise_error(msg).cast("boolean"))
-
-
-def _group_ceiling_sql(cnt_sql: str, what: str,
-                       cap: "int | None" = None) -> str:
-    """SQL-text twin of :func:`require_group_within` for fused
-    single-``spark.sql`` plan builds — same predicate tree, same
-    message (shared templates above)."""
-    cap = MAX_GROUP_MEMBERS if cap is None else cap
-    pre = _CEILING_MSG_PRE.format(what=what).replace("'", "\\'")
-    post = _CEILING_MSG_POST.format(cap=cap).replace("'", "\\'")
-    return (f"CASE WHEN {cnt_sql} <= {int(cap)} THEN true "
-            f"ELSE CAST(raise_error(concat('{pre}', "
-            f"CAST({cnt_sql} AS STRING), '{post}')) AS BOOLEAN) END")
+    if not isinstance(cnt, str):
+        cnt = cnt._jc.toString()
+    msg = (f" members, above MAX_GROUP_MEMBERS={cap} — a hot "
+           "collision group this size means the banding/cell knobs "
+           "are mistuned for this corpus (or it needs exact-dedup "
+           "first); raise fstd2pandas_spark.operators.llm.dedup."
+           "MAX_GROUP_MEMBERS deliberately if the B^2/2 pair "
+           "fan-out is intended")
+    what = what.replace("'", "\\'")
+    return (f"CASE WHEN {cnt} <= {int(cap)} THEN true "
+            f"ELSE CAST(raise_error(concat('{what} has ', "
+            f"CAST({cnt} AS STRING), '{msg}')) AS BOOLEAN) END")
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -108,9 +96,32 @@ MINHASH_BS = [324011567, 832040011, 514229033, 196418123,
               1597031, 610099, 233239, 89017]
 
 
-def base_hash_col(s: Column) -> Column:
-    """32-bit base hash: first 8 md5 hex digits as integer."""
-    return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
+def _shingle_hashes(shingle_k: int) -> Column:
+    """The md5 base hash (:func:`token_hash_col`) of every word
+    shingle of the ``_tk`` token column — the ONE md5 per shingle all
+    affine variants read. Built once per Spark context: the lambda
+    Column tree costs ~20 ms of py4j round trips per build."""
+    return session_memo(("minhash_shingle_hashes", shingle_k), lambda: (
+        F.transform(shingles_col(F.col("_tk"), shingle_k), token_hash_col)))
+
+
+def _minhash_sig_sql(hashes: str, num_hashes: int) -> str:
+    """SQL text of the ``num_hashes``-wide signature over the base-hash
+    array column ``hashes``: one flat transform + array_min per affine
+    variant, P when the shingle set is empty. ONE SQL string — the
+    Column DSL would cost hundreds of py4j round-trips to build. Both
+    MinHash paths get their ``num_hashes`` range check here."""
+    if not 1 <= num_hashes <= len(MINHASH_AS):
+        raise ValueError(
+            f"num_hashes must be in 1..{len(MINHASH_AS)} (the affine "
+            f"coefficient family width), got {num_hashes} — 0 would "
+            "give every document the identical empty signature")
+    terms = ", ".join(
+        f"coalesce(array_min(transform({hashes}, "
+        f"h -> (cast({MINHASH_AS[i]} as bigint) * h + {MINHASH_BS[i]}) "
+        f"% {MINHASH_P})), cast({MINHASH_P} as bigint))"
+        for i in range(num_hashes))
+    return f"array({terms})"
 
 
 def minhash_signature(df: DataFrame, text_col: str = "text",
@@ -130,11 +141,7 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
     hash is the fold *input*, so it is computed exactly once per shingle
     regardless of signature width — the variants are integer arithmetic.
     Shuffle-free per-document computation."""
-    if not 1 <= num_hashes <= len(MINHASH_AS):
-        raise ValueError(
-            f"num_hashes must be in 1..{len(MINHASH_AS)} (the affine "
-            f"coefficient family width), got {num_hashes} — 0 would "
-            "give every document the identical empty signature")
+    sig = _minhash_sig_sql("_mh", num_hashes)
     # Projection boundaries matter doubly here (CollapseProject keeps
     # expensive multi-referenced aliases, and HOF lambdas have no
     # loop-invariant hoisting): tokens materialize first — an inline
@@ -142,20 +149,12 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
     # transform — then the base-hash array (md5 once per shingle). The
     # per-hash variants are one flat transform + array_min each: far
     # fewer allocations than a fold rebuilding a num_hashes-wide
-    # accumulator per shingle. The sig expression is ONE SQL string — the
-    # Column DSL would cost hundreds of py4j round-trips to build.
+    # accumulator per shingle.
     df = ensure_min_partitions(df)
     with_t = df.withColumn("_tk", tokens_col(F.col(text_col)))
-    sh = shingles_col(F.col("_tk"), shingle_k)
     with_h = with_t.withColumn(
-        "_mh", F.transform(sh, base_hash_col)).drop("_tk")
-    terms = ", ".join(
-        "coalesce(array_min(transform(_mh, "
-        f"h -> (cast({MINHASH_AS[i]} as bigint) * h + {MINHASH_BS[i]}) "
-        f"% {MINHASH_P})), cast({MINHASH_P} as bigint))"
-        for i in range(num_hashes)
-    )
-    return with_h.withColumn("sig", F.expr(f"array({terms})")).drop("_mh")
+        "_mh", _shingle_hashes(shingle_k)).drop("_tk")
+    return with_h.withColumn("sig", F.expr(sig)).drop("_mh")
 
 
 def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
@@ -202,15 +201,9 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
         raise ValueError(
             f"num_hashes ({num_hashes}) must be a multiple of bands "
             f"({bands}); a ragged banding drops remainder hashes")
-    # the fused SQL no longer routes through minhash_signature, so its
-    # range check must live here too (r19): num_hashes = 0 would
-    # silently return the empty pair set (every band bucket equals the
-    # r = 0 sentinel), and > len(MINHASH_AS) a bare IndexError
-    if not 1 <= num_hashes <= len(MINHASH_AS):
-        raise ValueError(
-            f"num_hashes must be in 1..{len(MINHASH_AS)} (the affine "
-            f"coefficient family width), got {num_hashes} — 0 would "
-            "give every document the identical empty signature")
+    # range-checked here: num_hashes = 0 would silently return the
+    # empty pair set (every band bucket equals the r = 0 sentinel)
+    sig = _minhash_sig_sql("_mh", num_hashes)
     r = num_hashes // bands
     # DEGENERATE documents (empty shingle set: fewer than shingle_k
     # tokens, or NULL text) all share the all-sentinel signature, so
@@ -229,42 +222,26 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
 
     sentinel_bucket = _hashlib.md5(
         "|".join([str(MINHASH_P)] * r).encode()).hexdigest()
-    # r18: ONE spark.sql statement for the whole pipeline. The former
-    # Column-DSL chain re-ran eager analysis per transformation (~13
-    # steps over a fold-bearing plan) and cost ~300 ms of driver time
-    # per build (measured); the fused CTE form is a single parse + one
-    # analysis pass. Each CTE mirrors one DSL step — same expressions,
-    # same filter placement (sentinel filter AFTER banding, never on
-    # the sig column; ceiling then size>1 above the fold) — so the
-    # optimized plan is unchanged: signatures computed once, one
-    # (band, bucket) exchange, two chained Generates streaming i<j
-    # pairs, map-side-combined final n_bands aggregation (plan-locked
-    # in tests/test_plans.py; value equivalence vs the unfused
-    # minhash_signature building blocks pinned in tests/test_llm.py).
-    sig_terms = ", ".join(
-        "coalesce(array_min(transform(_mh, "
-        f"h -> (cast({MINHASH_AS[i]} as bigint) * h + {MINHASH_BS[i]}) "
-        f"% {MINHASH_P})), cast({MINHASH_P} as bigint))"
-        for i in range(num_hashes))
-    k = int(shingle_k)
-    shingles = (
-        f"CASE WHEN nullif(size(_tk), -1) < {k} "
-        "THEN CAST(array() AS ARRAY<STRING>) "
-        f"ELSE transform(sequence(0, nullif(size(_tk), -1) - {k}), "
-        f"j -> array_join(slice(_tk, j + 1, {k}), ' ')) END")
-    src = ensure_min_partitions(df)
+    # The base-hash array comes from the same DataFrame steps as
+    # minhash_signature's (tokens behind a projection boundary, then
+    # one md5 per shingle); everything relational after it is ONE
+    # spark.sql statement. Built as a Column-DSL chain, each of its ~13
+    # steps re-ran eager analysis over the fold-bearing plan (~300 ms
+    # of driver time per build, measured); the CTE form is a single
+    # parse + one analysis pass. The plan is plan-locked in
+    # tests/test_plans.py: signatures computed once, sentinel filter
+    # AFTER banding (never on the sig column), ceiling then size>1
+    # above the fold, one (band, bucket) exchange, two chained
+    # Generates streaming i<j pairs, map-side-combined final n_bands
+    # aggregation; value equivalence vs minhash_signature is pinned in
+    # tests/test_llm.py.
+    tokens = ensure_min_partitions(df).select(
+        F.col(id_col).alias("_id"),
+        tokens_col(F.col(text_col)).alias("_tk"))
+    hashes = tokens.select(
+        "_id", _shingle_hashes(shingle_k).alias("_mh"))
     return df.sparkSession.sql(f"""
-      WITH _t AS (
-        SELECT {sql_ident(id_col)} AS _id,
-               split(lower({sql_ident(text_col)}), ' ') AS _tk
-        FROM {{src}}
-      ),
-      _h AS (
-        SELECT _id, transform({shingles},
-                 s -> CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT)) AS _mh
-        FROM _t
-      ),
-      _sig AS (SELECT _id, array({sig_terms}) AS sig FROM _h),
+      WITH _sig AS (SELECT _id, {sig} AS sig FROM {{hashes}}),
       _b0 AS (
         SELECT _id, explode(transform(sequence(0, {int(bands) - 1}),
                  b -> named_struct('band', b, 'bucket',
@@ -282,7 +259,7 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
       ),
       _grouped AS (
         SELECT * FROM _g0
-        WHERE {_group_ceiling_sql('size(ids)', 'LSH bucket')}
+        WHERE {require_group_within('size(ids)', 'LSH bucket')}
           AND size(ids) > 1
       ),
       _outer AS (
@@ -298,7 +275,7 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text",
       )
       SELECT doc_a, doc_b, count(*) AS n_bands
       FROM _pairs GROUP BY doc_a, doc_b
-    """, src=src)
+    """, hashes=hashes)
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
@@ -580,16 +557,16 @@ def simhash_hamming_pairs(df: DataFrame, text_col: str = "text",
     collapse the block keyspace and degenerate toward all-pairs on a
     large corpus.  Returns (doc_a, doc_b, hamming) with doc_a < doc_b.
     """
-    grouped, sizes = _simhash_blocks_grouped(
+    grouped, layout = _simhash_blocks_grouped(
         df, text_col, id_col, bits, max_hamming)
-    return _pairs_from_grouped(grouped, max_hamming, sizes)
+    return _pairs_from_grouped(grouped, max_hamming, layout)
 
 
 def _simhash_blocks_grouped(df: DataFrame, text_col: str, id_col: str,
                             bits: int, max_hamming: int):
     """Shared pigeonhole machinery: ONE signature pass + ONE shuffle
     grouping (block, value) into the sorted (id, simhash) member array.
-    Returns (grouped_df, block_sizes); callers filter/derive from it.
+    Returns (grouped_df, block_layout); callers filter/derive from it.
 
     NULL-text rows are excluded HERE, on the source column, before the
     signature projection is even attached — the cheapest point (the
@@ -627,33 +604,53 @@ def signature_hamming_pairs(df: DataFrame, sig_col: str,
     sh = df.select(
         F.col(id_col).alias("doc_id"),
         F.col(sig_col).cast("long").alias("simhash"))
-    grouped, sizes = _signature_blocks_grouped(sh, "simhash", "doc_id",
-                                               bits, max_hamming)
-    return _pairs_from_grouped(grouped, max_hamming, sizes)
+    grouped, layout = _signature_blocks_grouped(sh, "simhash", "doc_id",
+                                                bits, max_hamming)
+    return _pairs_from_grouped(grouped, max_hamming, layout)
+
+
+def _block_layout(bits: int, max_hamming: int) -> "list[tuple[int, int]]":
+    """(offset, mask) of each of the ``max_hamming + 1`` pigeonhole
+    blocks of a ``bits``-wide signature. Bits are distributed EVENLY
+    (floor + remainder): ceil sizing can push the last block past the
+    bit width, where its value is 0 for every document and the
+    per-block equi-join degenerates to all-pairs. A FULL-width block
+    (bits=64, max_hamming=0) needs the all-ones mask -1: (1 << 64) - 1
+    overflows a bigint literal."""
+    n_blocks = max_hamming + 1
+    if bits < n_blocks:
+        raise ValueError("need at least one bit per block")
+    base, rem = divmod(bits, n_blocks)
+    sizes = [base + (1 if i < rem else 0) for i in range(n_blocks)]
+    return [(sum(sizes[:i]), (1 << size) - 1 if size < 64 else -1)
+            for i, size in enumerate(sizes)]
+
+
+def _block_value_sql(sig: str, block: "tuple[int, int]") -> str:
+    """SQL text of one pigeonhole block's value of signature ``sig``."""
+    offset, mask = block
+    return f"(shiftright({sig}, {offset}) & {mask})"
+
+
+def _minimal_block_sql(layout: "list[tuple[int, int]]", block: str,
+                       a_sig: str, b_sig: str) -> str:
+    """SQL predicate: `block` is the FIRST pigeonhole block on which
+    the two signatures agree — the pure-bit-arithmetic cross-block pair
+    dedup of :func:`_pairs_from_grouped` and :func:`simhash_report_rows`."""
+    return " AND ".join(
+        f"({block} <= {j} OR {_block_value_sql(a_sig, b)} != "
+        f"{_block_value_sql(b_sig, b)})"
+        for j, b in enumerate(layout[:-1])) or "true"
 
 
 def _signature_blocks_grouped(sh: DataFrame, sig_col: str, id_col: str,
                               bits: int, max_hamming: int):
-    n_blocks = max_hamming + 1
-    if bits < n_blocks:
-        raise ValueError("need at least one bit per block")
-    # distribute bits EVENLY (floor + remainder): ceil sizing can push
-    # the last block past the bit width, where its value is 0 for every
-    # document and the per-block equi-join degenerates to all-pairs
-    base, rem = divmod(bits, n_blocks)
-    sizes = [base + (1 if i < rem else 0) for i in range(n_blocks)]
-    offsets = [sum(sizes[:i]) for i in range(n_blocks)]
+    layout = _block_layout(bits, max_hamming)
     block_structs = [
-        F.struct(
-            F.lit(i).alias("block"),
-            F.shiftright(F.col(sig_col), offsets[i])
-            # a FULL-width block (bits=64, max_hamming=0) needs the
-            # all-ones mask -1: (1 << 64) - 1 overflows F.lit's long
-            # and died as a cryptic py4j NumberFormatException
-            .bitwiseAND(F.lit((1 << sizes[i]) - 1 if sizes[i] < 64
-                              else -1)).alias("value"))
-        for i in range(n_blocks)
-    ]
+        F.struct(F.lit(i).alias("block"),
+                 F.expr(_block_value_sql(sql_ident(sig_col), b))
+                 .alias("value"))
+        for i, b in enumerate(layout)]
     banded = sh.select(
         F.col(id_col), F.col(sig_col),
         F.explode(F.array(*block_structs)).alias("b"),
@@ -681,32 +678,13 @@ def _signature_blocks_grouped(sh: DataFrame, sig_col: str, id_col: str,
     # df.filter(sig.isNotNull()) was measured to double the fold).
     # Both properties are plan-locked in tests/test_plans.py.
     grouped = grouped.filter(F.col("value").isNotNull())
-    grouped = grouped.filter(
-        require_group_within(F.size("ms"), "signature pigeonhole block"))
-    return grouped, sizes
-
-
-def _minimal_block_pred(sizes: "list[int]", block_col: str,
-                        a_sig: str, b_sig: str) -> Column:
-    """True iff `block_col` is the FIRST pigeonhole block on which the
-    two signatures agree — the pure-bit-arithmetic cross-block pair
-    dedup shared by :func:`_pairs_from_grouped` and
-    :func:`simhash_report_rows` (one definition, two consumers: a mask
-    or offset change cannot desynchronize them)."""
-    offsets = [sum(sizes[:i]) for i in range(len(sizes))]
-    pred = F.lit(True)
-    for j in range(len(sizes) - 1):
-        mask = (1 << sizes[j]) - 1
-        pred = pred & (
-            (F.col(block_col) <= F.lit(j))
-            | (F.shiftright(F.col(a_sig), offsets[j]).bitwiseAND(F.lit(mask))
-               != F.shiftright(F.col(b_sig), offsets[j])
-               .bitwiseAND(F.lit(mask))))
-    return pred
+    grouped = grouped.filter(F.expr(
+        require_group_within("size(ms)", "signature pigeonhole block")))
+    return grouped, layout
 
 
 def _pairs_from_grouped(grouped: DataFrame, max_hamming: int,
-                        sizes: "list[int]") -> DataFrame:
+                        layout: "list[tuple[int, int]]") -> DataFrame:
     """Stream i<j pairs out of the per-(block, value) member arrays.
 
     A pair within the Hamming radius can collide in SEVERAL blocks; the
@@ -716,8 +694,8 @@ def _pairs_from_grouped(grouped: DataFrame, max_hamming: int,
     structs, "the pair also agrees on some earlier block j < block" is
     a pure bit-arithmetic predicate, so the dedup costs a few codegen'd
     comparisons per candidate and the pair stream stays narrow (no
-    post-fold shuffle at all).  `sizes` are the per-block bit widths
-    from :func:`_signature_blocks_grouped`.
+    post-fold shuffle at all).  `layout` is the block layout from
+    :func:`_signature_blocks_grouped`.
     """
     outer = (grouped.filter(F.size("ms") > 1)
              .select("block", "ms", F.posexplode("ms").alias("_i", "a")))
@@ -725,9 +703,9 @@ def _pairs_from_grouped(grouped: DataFrame, max_hamming: int,
         "block", "a",
         F.explode(
             F.expr("slice(ms, _i + 2, size(ms) - _i - 1)")).alias("b"))
-    minimal_block = _minimal_block_pred(sizes, "block", "a.s", "b.s")
     return (
-        pairs.filter(minimal_block)
+        pairs.filter(F.expr(
+            _minimal_block_sql(layout, "block", "a.s", "b.s")))
         .select(
             F.col("a.i").alias("doc_a"), F.col("b.i").alias("doc_b"),
             F.bit_count(F.col("a.s").bitwiseXOR(F.col("b.s")))
@@ -768,7 +746,7 @@ def simhash_report(df: DataFrame, text_col: str = "text",
     dominant population (singleton groups of blocks 1..n) before the
     checkpoint write — at 48-bit signatures that is ~2/3 of the rows.
     """
-    grouped, sizes = _simhash_blocks_grouped(
+    grouped, layout = _simhash_blocks_grouped(
         df, text_col, id_col, bits, max_hamming)
     grouped = grouped.filter(
         (F.col("block") == 0) | (F.size("ms") > 1)
@@ -777,7 +755,7 @@ def simhash_report(df: DataFrame, text_col: str = "text",
         F.col("value").alias("simhash"),
         F.size("ms").alias("n_docs"),
         F.col("ms")[0]["i"].alias("min_doc"))
-    return buckets, _pairs_from_grouped(grouped, max_hamming, sizes)
+    return buckets, _pairs_from_grouped(grouped, max_hamming, layout)
 
 
 def simhash_report_rows(df: DataFrame, text_col: str = "text",
@@ -814,41 +792,24 @@ def simhash_report_rows(df: DataFrame, text_col: str = "text",
             f"{id_type!r} — the fused (v1, v2, v3) long schema needs "
             "an integral id (non-ANSI would silently NULL doc ids "
             "out); use simhash_report for string ids")
-    if not 1 <= bits <= 60:
-        raise ValueError(
-            f"simhash bits must be in 1..60 (md5-prefix base hash), "
-            f"got {bits} — bits < 1 would give every document the "
-            "constant signature 0, collapsing the whole corpus into "
-            "one near-duplicate bucket")
-    n_blocks = max_hamming + 1
-    if bits < n_blocks:
-        raise ValueError("need at least one bit per block")
-    # r18: the whole pipeline is built as ONE spark.sql statement.
-    # The step-by-step Column-DSL build of the same plan cost ~306 ms
-    # of pure driver time per call (measured min-of-7 at sf0.1: each
-    # of the ~14 chained transformations re-runs eager analysis over
-    # the full fold-bearing plan plus its py4j round-trips); the fused
-    # CTE form is a single parse + one analysis pass (~70 ms). Every
-    # CTE mirrors one step of the former DSL chain (same expressions,
-    # same filter placement), so the optimized plan — fold-once, two
-    # chained Generates, no post-fold shuffle — is unchanged
-    # (plan-locked in tests/test_plans.py; value-equivalence of the
-    # fused build is pinned in tests/test_llm.py).
-    base, rem = divmod(bits, n_blocks)
-    sizes = [base + (1 if i < rem else 0) for i in range(n_blocks)]
-    offsets = [sum(sizes[:i]) for i in range(n_blocks)]
+    fold = simhash_fold_sql("_th", bits)
+    layout = _block_layout(bits, max_hamming)
+    # ONE spark.sql statement: built step by step as a Column-DSL
+    # chain, the same plan cost ~306 ms of pure driver time per call
+    # (measured min-of-7 at sf0.1: each of the ~14 chained
+    # transformations re-ran eager analysis over the full fold-bearing
+    # plan plus its py4j round-trips); the CTE form is a single parse +
+    # one analysis pass (~70 ms). Every fragment below comes from the
+    # builder its DataFrame sibling calls (token hashes, vote fold,
+    # block structs, ceiling, minimal-block predicate), and the
+    # optimized plan — fold-once, two chained Generates, no post-fold
+    # shuffle — is plan-locked in tests/test_plans.py; value
+    # equivalence with simhash_report is pinned in tests/test_llm.py.
     src = ensure_min_partitions(df.filter(F.col(text_col).isNotNull()))
-    counts = (f"aggregate(_th, array_repeat(cast(0 as bigint), {bits}), "
-              "(acc, h) -> transform(acc, (a, i) -> a + (shiftright(h, i) & 1)))")
-    sh = (f"aggregate(transform({counts}, (c, i) -> "
-          "CASE WHEN c * 2 > size(_th) "
-          "THEN shiftleft(cast(1 as bigint), i) ELSE cast(0 as bigint) END), "
-          "cast(0 as bigint), (a, x) -> a + x)")
     block_structs = ", ".join(
         f"named_struct('block', {i}, 'value', "
-        f"(shiftright(simhash, {offsets[i]}) & "
-        f"{(1 << sizes[i]) - 1 if sizes[i] < 64 else -1}))"
-        for i in range(n_blocks))
+        f"{_block_value_sql('simhash', b)})"
+        for i, b in enumerate(layout))
     e_arr = (
         "concat("
         "filter(array(named_struct('k', 0, 'i', -1)), x -> block = 0), "
@@ -856,20 +817,15 @@ def simhash_report_rows(df: DataFrame, text_col: str = "text",
         "   x -> named_struct('k', 1, 'i', cast(x as int))), "
         "   filter(array(named_struct('k', 1, 'i', -1)), x -> false)))"
     )
-    minimal_block = " AND ".join(
-        f"(block <= {j} OR (shiftright(a.s, {offsets[j]}) & "
-        f"{(1 << sizes[j]) - 1}) != (shiftright(b.s, {offsets[j]}) & "
-        f"{(1 << sizes[j]) - 1}))"
-        for j in range(n_blocks - 1)) or "true"
+    minimal_block = _minimal_block_sql(layout, "block", "a.s", "b.s")
     hamming = "bit_count(a.s ^ b.s)"
     return df.sparkSession.sql(f"""
       WITH _t AS (
         SELECT {sql_ident(id_col)} AS doc_id,
-               transform(split(lower({sql_ident(text_col)}), ' '),
-                 t -> cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint)) AS _th
+               {simhash_token_hashes_sql(text_col)} AS _th
         FROM {{src}}
       ),
-      _sh AS (SELECT doc_id, {sh} AS simhash FROM _t),
+      _sh AS (SELECT doc_id, {fold} AS simhash FROM _t),
       _b0 AS (SELECT doc_id, simhash,
                      explode(array({block_structs})) AS b
               FROM _sh),
@@ -885,7 +841,7 @@ def simhash_report_rows(df: DataFrame, text_col: str = "text",
       _grouped AS (
         SELECT * FROM _g0
         WHERE value IS NOT NULL
-          AND {_group_ceiling_sql('size(ms)', 'signature pigeonhole block')}
+          AND {require_group_within('size(ms)', 'signature pigeonhole block')}
       ),
       _ex1 AS (SELECT block, value, ms, explode({e_arr}) AS e
                FROM _grouped),

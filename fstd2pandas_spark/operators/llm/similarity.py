@@ -70,9 +70,9 @@ def _weights_matrix(n_cells: int, dim: int, weights=None):
 
 
 def _codebook_matrix(m: int, ksub: int, d_sub: int, codebook=None):
-    """PQ codebook as float64[m, ksub, d_sub] — the literal values
-    :func:`_pq_centroid` emits, gathered driver-side for the Arrow
-    kernels."""
+    """PQ codebook as float64[m, ksub, d_sub] for the Arrow kernels: the
+    trained codebook when given, else the md5 seed ``pq{sub}_{c}_{j}``
+    (the :func:`_weights_matrix` recipe)."""
     import numpy as np
 
     rows = []
@@ -96,11 +96,11 @@ def _append_ann_cols(df: DataFrame, vec_col: str, *,
     dim / m x ksub x d_sub interpreted distance folds PER ROW — the
     repo's largest absolute cost (measured 16.9 s vs 0.32 s for the
     kernel on the sf0.1 embeddings table, 52x). Values are
-    bit-identical to :func:`ivf_cell_col` / :func:`pq_codes_col` — the
-    kernels vectorize across rows but keep the folds sequential across
-    dimensions (the exactness argument lives in
-    ``_ann_kernels.py``; pinned by tests/test_ann_kernels.py on a
-    dirty corpus).
+    bit-identical to the Column forms ``ivf_cell_col`` /
+    ``pq_codes_col`` kept in tests/_ann_ref.py — the kernels vectorize
+    across rows but keep the folds sequential across dimensions (the
+    exactness argument lives in ``_ann_kernels.py``; pinned by
+    tests/test_ann_kernels.py on a dirty corpus).
 
     ``mapInArrow`` ships EVERY input column through the Python worker
     — callers project ``df`` down to the columns they need first (all
@@ -169,6 +169,14 @@ def _norm(a: Column) -> Column:
     ))
 
 
+def _cosine(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine of ``a`` and ``b`` given their norms (hoisted per row by
+    the pair-plane callers) — the one home of :func:`cosine_col`'s
+    NULL contract."""
+    return F.nanvl(F.try_divide(_dot(a, b), na * nb),
+                   F.lit(None).cast("double"))
+
+
 def cosine_col(a: Column, b: Column) -> Column:
     """Cosine similarity between two float arrays (double precision).
 
@@ -185,9 +193,7 @@ def cosine_col(a: Column, b: Column) -> Column:
     of the dot and norm folds, no guard re-evaluation — so undefined
     similarities drop out of thresholds and sort AFTER every real
     candidate, matching the module's NULL-metric contract."""
-    return F.nanvl(
-        F.try_divide(_dot(a, b), _norm(a) * _norm(b)),
-        F.lit(None).cast("double"))
+    return _cosine(a, b, _norm(a), _norm(b))
 
 
 def cosine_topk(emb: DataFrame, query_ids: list[int] | None = None,
@@ -204,19 +210,21 @@ def cosine_topk(emb: DataFrame, query_ids: list[int] | None = None,
     zero-norm/NaN candidates score NULL (see :func:`cosine_col`) and
     rank after every real neighbor.
 
-    r18: built as ONE spark.sql statement over the bound source — the
-    former Column-DSL chain cost ~250 ms of driver-side build per call
-    (eager analysis per step + py4j round trips); each CTE mirrors one
-    DSL step verbatim (same BROADCAST of the query side, the
-    NULL-cos/rank filter still ABOVE the window where cos is a plain
-    attribute), so the optimized plan and values are unchanged (A/B
-    verified; oracle gate + numpy cross-check pin it)."""
-    id_col, vec_col = sql_ident(id_col), sql_ident(vec_col)
+    Built as ONE spark.sql statement over the bound source: one parse
+    and one analysis pass. The former Column-DSL chain cost ~250 ms of
+    driver-side build per call (eager analysis per step + py4j round
+    trips); a DSL build over the shared :func:`_dot`/:func:`_norm`/
+    :func:`_cosine` helpers gives the same values and physical
+    operators but measured 154-181 ms median build against 43-68 ms
+    for this text, about a quarter of the query's run time. The plan
+    keeps the BROADCAST of the query side and the NULL-cos/rank filter
+    ABOVE the window where cos is a plain attribute (oracle gate +
+    numpy cross-check pin the values)."""
     if query_ids is None:
-        qpred = f"{id_col} < {int(n_queries)}"
+        qpred = f"{sql_ident(id_col)} < {int(n_queries)}"
     else:
         ids = ", ".join(str(int(i)) for i in query_ids)
-        qpred = f"{id_col} IN ({ids})"
+        qpred = f"{sql_ident(id_col)} IN ({ids})"
     dot = ("aggregate(zip_with(_qv, _cv, "
            "(x, y) -> cast(x as double) * cast(y as double)), "
            "0.0D, (acc, x) -> acc + x)")
@@ -241,14 +249,16 @@ def cosine_topk(emb: DataFrame, query_ids: list[int] | None = None,
     return emb.sparkSession.sql(f"""
       WITH _f AS (
         SELECT * FROM {{src}}
-        WHERE {vec_col} IS NOT NULL
-          AND NOT exists({vec_col}, x -> x IS NULL)
+        WHERE {sql_ident(vec_col)} IS NOT NULL
+          AND NOT exists({sql_ident(vec_col)}, x -> x IS NULL)
       ),
-      _q AS (SELECT {id_col} AS query_id, {vec_col} AS _qv,
-                    {norm(vec_col)} AS _qn
+      _q AS (SELECT {sql_ident(id_col)} AS query_id,
+                    {sql_ident(vec_col)} AS _qv,
+                    {norm(sql_ident(vec_col))} AS _qn
              FROM _f WHERE {qpred}),
-      _c AS (SELECT {id_col} AS neighbor_id, {vec_col} AS _cv,
-                    {norm(vec_col)} AS _cn
+      _c AS (SELECT {sql_ident(id_col)} AS neighbor_id,
+                    {sql_ident(vec_col)} AS _cv,
+                    {norm(sql_ident(vec_col))} AS _cn
              FROM _f),
       _s AS (
         SELECT /*+ BROADCAST(_q) */ neighbor_id, _cv, query_id, _qv,
@@ -314,8 +324,8 @@ def embedding_neardup(emb: DataFrame, threshold: float = 0.4,
         ).repartition("_bucket")
         bn = F.count(F.lit(1)).over(Window.partitionBy("_bucket"))
         bucketed = (bucketed.withColumn("_bn", bn)
-                    .filter(require_group_within(F.col("_bn"),
-                                                 "embedding LSH bucket"))
+                    .filter(F.expr(require_group_within(
+                        "_bn", "embedding LSH bucket")))
                     .drop("_bn"))
         a = bucketed.select(F.col("_id").alias("vec_a"),
                             F.col("_v").alias("_va"),
@@ -336,9 +346,7 @@ def embedding_neardup(emb: DataFrame, threshold: float = 0.4,
                        F.col(vec_col).alias("_vb"),
                        _norm(F.col(vec_col)).alias("_nb"))
         joined = a.crossJoin(b)
-    cos = F.nanvl(F.try_divide(_dot(F.col("_va"), F.col("_vb")),
-                               F.col("_na") * F.col("_nb")),
-                  F.lit(None).cast("double"))
+    cos = _cosine(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"))
     return (
         joined.filter(F.col("vec_a") < F.col("vec_b"))
         .withColumn("cos", F.round(cos, 6))
@@ -361,30 +369,6 @@ def _centroid_col(cell: int, dim: int, weights=None) -> Column:
     if weights is not None and weights[cell] is not None:
         return F.lit([float(w) for w in weights[cell]])
     return F.lit(_md5_seed(f"ivf{cell}_", dim))
-
-
-def ivf_cell_col(vec: Column, n_cells: int, dim: int,
-                 weights=None) -> Column:
-    """IVF cell assignment: argmax over cells of <vec, centroid_c>
-    (ties break toward the lower cell id).
-
-    Linear argmax (r18): each dot product appears ONCE in a scores
-    array and the winner is ``array_position(scores,
-    array_max(scores))`` — the previous running-best ``when`` chain
-    embedded the accumulated expression twice per step, doubling the
-    (interpreted, HOF-bearing) tree per cell: 2^n_cells dot-product
-    copies evaluated per row. Semantics preserved exactly:
-    first-occurrence-of-max = lowest winning cell (the strictly-greater
-    chain's tie-break); Spark orders NaN greatest and equates NaN=NaN,
-    so a NaN score wins in both forms and position finds the first NaN;
-    an all-NULL score row (NULL/short vector — dot nullability depends
-    only on ``vec``, centroids are literals) fell through every
-    ``when`` to the initial cell 0, which the ``coalesce`` mirrors."""
-    scores = F.array(*[_dot(vec, _centroid_col(c, dim, weights))
-                       for c in range(n_cells)])
-    return F.coalesce(
-        (F.array_position(scores, F.array_max(scores)) - 1).cast("int"),
-        F.lit(0))
 
 
 def _searchable(vec_col: str) -> Column:
@@ -511,9 +495,10 @@ def ivf_ann_topk(emb: DataFrame, k: int = 5, n_cells: int = 8,
     if weights is None and refine:
         weights = lloyd_refine(emb, n_cells, dim, vec_col, iters=refine)
     # candidate cells via the Arrow kernel (r19, guide §4.2 — value-
-    # identical to ivf_cell_col, see _append_ann_cols); the norm is
-    # hoisted to the per-row side (the cosine_topk rationale — same
-    # expression, identical doubles, pair-many folds saved)
+    # identical to tests/_ann_ref.py's ivf_cell_col, see
+    # _append_ann_cols); the norm is hoisted to the per-row side (the
+    # cosine_topk rationale — same expression, identical doubles,
+    # pair-many folds saved)
     cand = _append_ann_cols(
         emb.select(F.col(id_col).alias("neighbor_id"),
                    F.col(vec_col).alias("_cv"),
@@ -535,9 +520,7 @@ def ivf_ann_topk(emb: DataFrame, k: int = 5, n_cells: int = 8,
                     F.slice(F.array_sort(scores), 1, nprobe)["cell"]
                 ).alias("_cell"))
     )
-    cos = F.nanvl(F.try_divide(_dot(F.col("_qv"), F.col("_cv")),
-                               F.col("_qn") * F.col("_cn")),
-                  F.lit(None).cast("double"))
+    cos = _cosine(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn"))
     scored = (
         cand.join(F.broadcast(q), "_cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -611,9 +594,7 @@ def lsh_ann_topk(emb: DataFrame, k: int = 5, n_planes: int = 4,
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"),
         _norm(F.col(vec_col)).alias("_cn"), "_bucket"
     )
-    cos = F.nanvl(F.try_divide(_dot(F.col("_qv"), F.col("_cv")),
-                               F.col("_qn") * F.col("_cn")),
-                  F.lit(None).cast("double"))
+    cos = _cosine(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn"))
     scored = (
         cand.join(F.broadcast(q), "_bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -748,18 +729,6 @@ def int8_quantize(emb: DataFrame,
 
 # ---------------------------------------------------------------- PQ / ADC
 
-def _pq_centroid(sub: int, c: int, d_sub: int,
-                 codebook=None) -> Column:
-    """PQ sub-centroid as a Column array: a trained literal when a
-    codebook is given (:func:`pq_train`), else the md5-seeded fallback
-    (same recipe as the IVF centroids): w[j] in [-1, 1) from
-    ``pq{sub}_{c}_{j}``. One ``F.lit(list)`` call per sub-centroid
-    (r19, the :func:`_centroid_col` rationale)."""
-    if codebook is not None:
-        return F.lit([float(w) for w in codebook[sub][c]])
-    return F.lit(_md5_seed(f"pq{sub}_{c}_", d_sub))
-
-
 def pq_train(emb: DataFrame, m: int = 8, ksub: int = 16, dim: int = 64,
              vec_col: str = "embedding", id_col: str = "vec_id",
              iters: int = 1) -> list:
@@ -824,39 +793,6 @@ def pq_train(emb: DataFrame, m: int = 8, ksub: int = 16, dim: int = 64,
     return codebook
 
 
-def _l2(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, v: acc + v)
-
-
-def pq_codes_col(vec: Column, m: int, ksub: int, dim: int,
-                 codebook=None) -> Column:
-    """Product-quantization code array (Jegou et al. 2011, public):
-    split the vector into `m` subvectors of dim/m, each coded as the
-    index of its nearest (L2) sub-centroid — ties break toward the
-    lower code. A narrow map: m * ksub fixed-size distance folds."""
-    if dim % m:
-        raise ValueError(f"dim ({dim}) must be a multiple of m ({m})")
-    d_sub = dim // m
-    codes = []
-    for sub in range(m):
-        sv = F.transform(
-            F.slice(vec, sub * d_sub + 1, d_sub),
-            lambda x: x.cast("double"))
-        # argmin via ONE struct sort (ties -> lower code): a when-chain
-        # would reference the running best twice per step and grow the
-        # expression tree 2^ksub
-        entries = F.array(*[
-            F.struct(_l2(sv, _pq_centroid(sub, c, d_sub, codebook))
-                     .alias("d"),
-                     F.lit(c).alias("c"))
-            for c in range(ksub)
-        ])
-        codes.append(F.array_sort(entries)[0]["c"])
-    return F.array(*codes)
-
-
 def pq_encode(emb: DataFrame, m: int = 8, ksub: int = 16, dim: int = 64,
               vec_col: str = "embedding", codebook=None) -> DataFrame:
     """Add ``pq_codes`` (array of m ints) and ``pq_packed`` — the codes
@@ -866,9 +802,10 @@ def pq_encode(emb: DataFrame, m: int = 8, ksub: int = 16, dim: int = 64,
     dim * 32.
 
     r19: codes come from the Arrow kernel (value-identical twin of
-    :func:`pq_codes_col` — see :func:`_append_ann_cols`); the kernel
-    pass ships every input column through the Python worker, so keep
-    the frame projected to what you need (all in-repo callers do).
+    ``pq_codes_col`` in tests/_ann_ref.py — see
+    :func:`_append_ann_cols`); the kernel pass ships every input column
+    through the Python worker, so keep the frame projected to what you
+    need (all in-repo callers do).
     The input is spread to the cluster's parallelism first (a no-op at
     scale; locally a single-file corpus otherwise encodes on one
     core — row order is not part of this function's contract)."""
@@ -914,10 +851,10 @@ def pq_adc_topk(emb: DataFrame, k: int = 5, m: int = 8, ksub: int = 16,
     score(q, x) = <q, reconstruct(codes_x)> = sum_j <q_j,
     cent[j][code_j]>. The corpus side carries ONLY (id, codes) — m *
     log2(ksub) bits per vector — and the query side broadcasts (it is
-    the small side by construction); compose with
-    :func:`ivf_cell_col` cell filters for IVF-PQ candidate
-    restriction at larger scale. Returns (query_id, neighbor_id, adc,
-    rank) with adc rounded to 6 dp and ranks dense per query.
+    the small side by construction); :func:`ivf_pq_topk` adds IVF
+    cell filters for candidate restriction at larger scale. Returns
+    (query_id, neighbor_id, adc, rank) with adc rounded to 6 dp and
+    ranks dense per query.
 
     NULL-embedding rows are excluded (uncodable, unsearchable — the
     :func:`cosine_topk` contract); a NaN query/reconstruction scores
@@ -983,7 +920,8 @@ def ivf_pq_topk(emb: DataFrame, k: int = 5, n_cells: int = 8,
     d_sub = dim // m
     # ONE Arrow pass assigns both the IVF cell and the PQ codes (r19,
     # guide §4.2 — one boundary crossing, value-identical twins of
-    # ivf_cell_col / pq_codes_col; see _append_ann_cols)
+    # tests/_ann_ref.py's ivf_cell_col / pq_codes_col; see
+    # _append_ann_cols)
     cand = _append_ann_cols(
         emb.select(F.col(id_col).alias("neighbor_id"),
                    F.col(vec_col).alias("_v")),
@@ -1054,7 +992,7 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.95,
 
     w = lloyd_refine(emb, n_cells, dim, vec_col, iters=train_iters)
     # cells via the Arrow kernel (r19 — value-identical twin of
-    # ivf_cell_col; see _append_ann_cols)
+    # tests/_ann_ref.py's ivf_cell_col; see _append_ann_cols)
     assigned = _append_ann_cols(
         ensure_min_partitions(emb).select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
@@ -1076,7 +1014,7 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.95,
     cell_n = F.count(F.lit(1)).over(Window.partitionBy("cell"))
     guarded = (pairable
                .withColumn("_cn", cell_n)
-               .filter(require_group_within(F.col("_cn"), "SemDeDup cell"))
+               .filter(F.expr(require_group_within("_cn", "SemDeDup cell")))
                .drop("_cn"))
     # each member's norm rides the struct (r19, guide §1.2): the pair
     # filter's cosine re-folded BOTH norms per candidate pair (pairs
@@ -1092,9 +1030,7 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.95,
                .filter(F.size("ms") > 1))
     outer = grouped.select(
         "cell", "ms", F.posexplode("ms").alias("_i", "a"))
-    cos = F.nanvl(F.try_divide(_dot(F.col("a.v"), F.col("b.v")),
-                               F.col("a.n") * F.col("b.n")),
-                  F.lit(None).cast("double"))
+    cos = _cosine(F.col("a.v"), F.col("b.v"), F.col("a.n"), F.col("b.n"))
     pairs = (outer.select(
         "a",
         F.explode(F.expr("slice(ms, _i + 2, size(ms) - _i - 1)"))

@@ -81,8 +81,8 @@ def language_id(df: DataFrame, text_col: str = "text",
     """
     df = ensure_min_partitions(df)
     toks = tokens_col(F.col(text_col))
-    # Linear argmax (r18, the ivf_cell_col fix): each language's marker
-    # count appears ONCE in a scores array — the previous running-best
+    # Linear argmax (r18, the IVF cell argmax fix): each language's
+    # marker count appears ONCE in a scores array — the previous running-best
     # `when` chain embedded the accumulated expression twice per
     # language (2^n_langs copies of the interpreted filter-HOF per
     # row). Tie-break preserved: langs iterate sorted ascending and
@@ -215,11 +215,12 @@ def repetition_metrics(df: DataFrame, text_col: str = "text",
         # loop-invariant hoisting, so an inlined {bg} inside the
         # distinct-transform would rebuild the whole array once per
         # distinct bigram (see minhash_signature's comment)
-        bg = (f"CASE WHEN size(split(lower({text_col}), ' ')) < 2 "
+        text = sql_ident(text_col)
+        bg = (f"CASE WHEN size(split(lower({text}), ' ')) < 2 "
               f"THEN array() "
-              f"ELSE transform(sequence(1, size(split(lower({text_col})"
+              f"ELSE transform(sequence(1, size(split(lower({text})"
               f", ' ')) - 1), j -> concat_ws(' ', "
-              f"slice(split(lower({text_col}), ' '), j, 2))) END")
+              f"slice(split(lower({text}), ' '), j, 2))) END")
         top = ("CASE WHEN size(_bg) = 0 THEN 0 ELSE "
                "array_max(transform(array_distinct(_bg), "
                "b -> size(filter(_bg, x -> x = b)))) END")
@@ -275,6 +276,41 @@ def repetition_metrics(df: DataFrame, text_col: str = "text",
     })
 
 
+def simhash_token_hashes_sql(text_col: str) -> str:
+    """SQL text of the per-token SimHash base hashes of ``text_col``
+    (quoted here, so any legal column name splices safely). The base
+    hash takes 15 hex digits (60 bits, the widest md5 prefix that fits
+    a signed bigint): an 8-digit (32-bit) base would leave bits 32+ of
+    wider signatures constant-zero, which silently degenerates the
+    pigeonhole blocks of
+    :func:`~fstd2pandas_spark.operators.llm.dedup.simhash_hamming_pairs`
+    covering those bits into an all-pairs join."""
+    return (f"transform(split(lower({sql_ident(text_col)}), ' '), "
+            "t -> cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint))")
+
+
+def simhash_fold_sql(hashes: str, bits: int) -> str:
+    """SQL text of the SimHash vote fold over the token-hash array
+    column ``hashes``: ONE ``aggregate`` walk with an array-of-counts
+    accumulator holding the per-bit set-counts, then ``votes_b > 0 <=>
+    2*count_b > n`` turns counts into sign votes. Every SimHash path
+    gets its ``bits`` range check here."""
+    if not 1 <= bits <= 60:
+        raise ValueError(
+            f"simhash bits must be in 1..60 (md5-prefix base hash), "
+            f"got {bits} — bits < 1 would give every document the "
+            "constant signature 0, collapsing the whole corpus into "
+            "one near-duplicate bucket")
+    counts = (f"aggregate({hashes}, "
+              f"array_repeat(cast(0 as bigint), {bits}), (acc, h) -> "
+              "transform(acc, (a, i) -> a + (shiftright(h, i) & 1)))")
+    return (f"aggregate(transform({counts}, (c, i) -> "
+            f"CASE WHEN c * 2 > size({hashes}) "
+            "THEN shiftleft(cast(1 as bigint), i) "
+            "ELSE cast(0 as bigint) END), "
+            "cast(0 as bigint), (a, x) -> a + x)")
+
+
 def simhash(df: DataFrame, text_col: str = "text", bits: int = 16,
             out_col: str = "simhash") -> DataFrame:
     """SimHash over token hashes: bit b of the output is set when the sum
@@ -282,40 +318,18 @@ def simhash(df: DataFrame, text_col: str = "text", bits: int = 16,
 
     One ``aggregate`` fold with an array-of-counts accumulator — the md5
     token hash is the fold input (computed once per token, not per bit),
-    and the token-hash array is walked ONCE: the accumulator holds the
-    per-bit set-counts, and ``votes_b > 0  <=>  2*count_b > n`` converts
-    counts to sign votes at the end. Measured at sf0.1 this is ~1.5x the
-    throughput of 16 unrolled per-bit folds (each re-walking the array).
+    and the token-hash array is walked ONCE (:func:`simhash_fold_sql`).
+    Measured at sf0.1 this is ~1.5x the throughput of 16 unrolled
+    per-bit folds (each re-walking the array).
     """
     # token-hash array behind a projection boundary: md5 once per token.
-    # Built as ONE SQL string — a wide expression assembled via the
-    # Column DSL costs hundreds of py4j round-trips (~2 s of pure
-    # driver-side build time); expr() parses it JVM-side in one call.
-    # The base hash takes 15 hex digits (60 bits, the widest md5 prefix
-    # that fits a signed bigint): an 8-digit (32-bit) base would leave
-    # bits 32+ of wider signatures constant-zero, which silently
-    # degenerates the pigeonhole blocks of
-    # :func:`~fstd2pandas_spark.operators.llm.dedup.simhash_hamming_pairs`
-    # covering those bits into an all-pairs join.
-    if not 1 <= bits <= 60:
-        raise ValueError(
-            f"simhash bits must be in 1..60 (md5-prefix base hash), "
-            f"got {bits} — bits < 1 would give every document the "
-            "constant signature 0, collapsing the whole corpus into "
-            "one near-duplicate bucket")
+    # Built as SQL text — a wide expression assembled via the Column DSL
+    # costs hundreds of py4j round-trips (~2 s of pure driver-side build
+    # time); expr() parses it JVM-side in one call.
+    fold = simhash_fold_sql("_th", bits)
     df = ensure_min_partitions(df)
-    with_h = df.withColumn(
-        "_th",
-        F.expr(f"transform(split(lower({text_col}), ' '), "
-               "t -> cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint))"),
-    )
-    counts = (f"aggregate(_th, array_repeat(cast(0 as bigint), {bits}), "
-              "(acc, h) -> transform(acc, (a, i) -> a + (shiftright(h, i) & 1)))")
-    sh = (f"aggregate(transform({counts}, (c, i) -> "
-          "CASE WHEN c * 2 > size(_th) "
-          "THEN shiftleft(cast(1 as bigint), i) ELSE cast(0 as bigint) END), "
-          "cast(0 as bigint), (a, x) -> a + x)")
-    return with_h.withColumn(out_col, F.expr(sh)).drop("_th")
+    with_h = df.withColumn("_th", F.expr(simhash_token_hashes_sql(text_col)))
+    return with_h.withColumn(out_col, F.expr(fold)).drop("_th")
 
 
 #: default Gopher-rule thresholds (Rae et al. 2021 §A1.1, adapted)

@@ -1,4 +1,5 @@
-"""The Arrow ANN kernels are bit-identical twins of the Column forms.
+"""The Arrow ANN kernels are bit-identical twins of the Column forms
+kept in tests/_ann_ref.py.
 
 r19 moved the IVF cell argmax and PQ code argmin from interpreted
 Column expression folds to numpy kernels behind mapInArrow
@@ -42,8 +43,9 @@ def dirty(spark):  # noqa: F811
 
 
 def test_arrow_cells_and_codes_match_column_forms(spark, dirty):  # noqa: F811
-    from fstd2pandas_spark.operators.llm.similarity import (
-        _append_ann_cols, ivf_cell_col, pq_codes_col)
+    from _ann_ref import ivf_cell_col, pq_codes_col
+
+    from fstd2pandas_spark.operators.llm.similarity import _append_ann_cols
 
     ref = dirty.select(
         "vec_id",
@@ -63,8 +65,10 @@ def test_arrow_cells_and_codes_match_column_forms(spark, dirty):  # noqa: F811
 def test_arrow_cells_match_with_trained_weights(spark, dirty):  # noqa: F811
     """Same equivalence through a refined (non-seed) centroid table,
     including cells left at their md5 seed by an empty cluster."""
+    from _ann_ref import ivf_cell_col
+
     from fstd2pandas_spark.operators.llm.similarity import (
-        _append_ann_cols, ivf_cell_col, lloyd_refine)
+        _append_ann_cols, lloyd_refine)
 
     w = lloyd_refine(dirty, N_CELLS, DIM, iters=1)
     ref = dirty.select(
@@ -79,8 +83,10 @@ def test_arrow_cells_match_with_trained_weights(spark, dirty):  # noqa: F811
 
 
 def test_arrow_codes_match_with_trained_codebook(spark, dirty):  # noqa: F811
+    from _ann_ref import pq_codes_col
+
     from fstd2pandas_spark.operators.llm.similarity import (
-        _append_ann_cols, pq_codes_col, pq_train)
+        _append_ann_cols, pq_train)
 
     cb = pq_train(dirty, m=M, ksub=KSUB, dim=DIM, iters=1)
     ref = dirty.select(

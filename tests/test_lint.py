@@ -16,10 +16,15 @@ fails the build the moment such a name lands:
 - no module-level import may be unused (referenced nowhere in the
   file, not re-exported via ``__all__``) — the dead ``jpath`` import
   the r12 refactor also left behind.  ``__init__.py`` files are
-  exempt (imports there ARE the re-export surface).
+  exempt (imports there ARE the re-export surface),
+- no f-string handed straight to ``F.expr``, ``selectExpr`` or
+  ``.sql(`` may splice a bare ``*_col`` name: caller column names go
+  through ``sql_ident(...)``, or a name with a space or hyphen breaks
+  the parse (the unquoted ``simhash()`` splice did exactly that).
 
-The checker is itself tested against injected defects (a dangling
-name, an unused import) so a silent checker regression cannot pass.
+The checkers are themselves tested against injected defects (a
+dangling name, an unused import, an unquoted splice) so a silent
+checker regression cannot pass.
 """
 
 from __future__ import annotations
@@ -233,6 +238,36 @@ def unused_imports(src: str, filename: str = "<src>") -> "list[str]":
                   for name, ln in imported.items() if name not in used)
 
 
+#: call targets whose string argument is parsed as SQL
+_SQL_SINKS = {"expr", "selectExpr", "sql"}
+
+
+def unquoted_sql_splices(src: str, filename: str = "<src>") -> "list[str]":
+    """Bare ``*_col`` names interpolated into an f-string passed
+    DIRECTLY to a SQL-parsing call (``F.expr``/``expr``,
+    ``selectExpr``, ``.sql``) — each must be wrapped in
+    ``sql_ident(...)``. Reported as ``name (line N)`` in line order."""
+    tree = ast.parse(src, filename)
+    bad = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        name = (f.attr if isinstance(f, ast.Attribute)
+                else f.id if isinstance(f, ast.Name) else "")
+        if name not in _SQL_SINKS:
+            continue
+        for arg in node.args:
+            if not isinstance(arg, ast.JoinedStr):
+                continue
+            for part in ast.walk(arg):
+                if (isinstance(part, ast.FormattedValue)
+                        and isinstance(part.value, ast.Name)
+                        and part.value.id.endswith("_col")):
+                    bad.append((part.lineno, part.value.id))
+    return [f"{name} (line {ln})" for ln, name in sorted(bad)]
+
+
 def _py_files() -> "list[pathlib.Path]":
     return sorted(PKG.rglob("*.py"))
 
@@ -277,6 +312,17 @@ def test_no_unused_module_level_imports():
     assert not problems, (
         "module-level imports referenced nowhere (dead API debris):\n"
         + "\n".join(problems))
+
+
+def test_no_unquoted_column_splices_into_sql():
+    problems = []
+    for p in _py_files():
+        bad = unquoted_sql_splices(p.read_text(), str(p))
+        if bad:
+            problems.append(f"{p.relative_to(PKG_ROOT)}: {bad}")
+    assert not problems, (
+        "caller column names spliced into SQL text without "
+        "sql_ident():\n" + "\n".join(problems))
 
 
 # ---- the checker is itself checked against injected defects ----
@@ -360,3 +406,21 @@ def test_checker_not_fooled_by_literal_value_strings():
 def test_checker_clean_on_tricky_scoping():
     assert dangling_names(_CLEAN_TRICKY) == []
     assert unused_imports(_CLEAN_TRICKY) == []
+
+
+_INJECTED_UNQUOTED = '''
+from pyspark.sql import functions as F
+from fstd2pandas_spark.operators.llm.text import sql_ident
+
+def hashes(df, text_col, id_col):
+    out = df.withColumn("_th", F.expr(
+        f"transform(split(lower({text_col}), ' '), t -> md5(t))"))
+    out = out.selectExpr(f"{sql_ident(id_col)} AS doc_id", "_th")
+    return df.sparkSession.sql(f"SELECT {id_col} FROM {{src}}", src=out)
+'''
+
+
+def test_checker_catches_injected_unquoted_splice():
+    # the sql_ident-wrapped splice is clean; both bare ones are caught
+    assert unquoted_sql_splices(_INJECTED_UNQUOTED) == [
+        "text_col (line 7)", "id_col (line 9)"]

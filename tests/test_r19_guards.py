@@ -45,7 +45,10 @@ def test_fused_sql_accepts_odd_column_names(spark):
     """Names legal to the old F.col() paths stay legal in the fused
     SQL: hyphens/spaces must parse as identifiers, not expressions."""
     from fstd2pandas_spark.operators.llm.dedup import (
-        lsh_candidate_pairs, simhash_report_rows)
+        lsh_candidate_pairs, simhash_buckets, simhash_hamming_pairs,
+        simhash_report, simhash_report_rows)
+    from fstd2pandas_spark.operators.llm.text import (
+        repetition_metrics, simhash)
     from fstd2pandas_spark.operators.llm.similarity import cosine_topk
 
     docs = spark.createDataFrame(
@@ -59,6 +62,21 @@ def test_fused_sql_accepts_odd_column_names(spark):
     rows = simhash_report_rows(docs, text_col="the text",
                                id_col="doc-id", max_hamming=3)
     assert rows.filter("kind = 'pair'").count() >= 1
+    sh = {r["doc-id"]: r["simhash"]
+          for r in simhash(docs, text_col="the text", bits=16).collect()}
+    assert sh[0] == sh[1] != sh[2]
+    buckets = simhash_buckets(docs, text_col="the text", id_col="doc-id")
+    assert {r["n_docs"] for r in buckets.collect()} == {2, 1}
+    near = simhash_hamming_pairs(docs, text_col="the text",
+                                 id_col="doc-id", max_hamming=3)
+    assert {(r["doc_a"], r["doc_b"]) for r in near.collect()} >= {(0, 1)}
+    b, p = simhash_report(docs, text_col="the text", id_col="doc-id",
+                          max_hamming=3)
+    assert b.count() >= 1 and (0, 1) in {
+        (r["doc_a"], r["doc_b"]) for r in p.collect()}
+    rep = repetition_metrics(docs, text_col="the text",
+                             id_col="doc-id").collect()
+    assert [r["n_bigrams"] for r in rep] == [3, 3, 3]
 
     emb = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 1.0])],

@@ -1,6 +1,7 @@
-"""A/B the Arrow ANN kernels against the Column-DSL implementations
-(r19): value equality on a dirty corpus (NULL vectors, NULL elements,
-NaN, +-inf, short/long vectors, ties) and same-process timing.
+"""A/B the Arrow ANN kernels against the Column-DSL reference forms in
+tests/_ann_ref.py (r19): value equality on a dirty corpus (NULL
+vectors, NULL elements, NaN, +-inf, short/long vectors, ties) and
+same-process timing.
 
 Usage: python tools/ab_ann_kernels.py [sf_dir]
 """
@@ -10,7 +11,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tests"))
 
 import numpy as np
 
@@ -23,8 +26,9 @@ def main():
     from pyspark.sql import functions as F
     import pyarrow as pa
 
-    from fstd2pandas_spark.operators.llm.similarity import (
-        _md5_seed, ivf_cell_col, pq_codes_col)
+    from _ann_ref import ivf_cell_col, pq_codes_col
+
+    from fstd2pandas_spark.operators.llm.similarity import _md5_seed
     from fstd2pandas_spark.operators.llm import _ann_kernels as K
 
     dim, n_cells, m, ksub = 64, 8, 8, 16
